@@ -500,7 +500,8 @@ def verify_corpus_version(
         .agg(F.count("*").alias("__n"), pos_ok.alias("__pos_ok"))
         .collect()
     )
-    counts: dict = {}
+    # a split the manifest records with 0 rows has no group to report
+    counts: dict = dict.fromkeys(split_names, 0)
     alien_splits, alien_shards, bad_shards = 0, 0, []
     total = 0
     for r in rows:
@@ -509,7 +510,7 @@ def verify_corpus_version(
         if sp is None or sp not in split_names:
             alien_splits += n
         else:
-            counts[sp] = counts.get(sp, 0) + n
+            counts[sp] += n
         if sh is None or not (0 <= sh < n_shards):
             alien_shards += n
         if not r["__pos_ok"]:

@@ -42,12 +42,18 @@ def build_cluster(
     picked by Spark's reservoir sampling of the sort key (the same idea as
     ZipNumPartitioner.getSplitIterator sampling an existing cluster's summary).
     """
-    cols = [F.col(c) for c in sort_cols]
+    return range_partition(df, num_ranges, sort_cols).sortWithinPartitions(*sort_cols)
+
+
+def range_partition(
+    df: DataFrame, num_ranges: int | None, cols: Sequence[str]
+) -> DataFrame:
+    """``repartitionByRange`` on ``cols`` into ``num_ranges`` ranges
+    (``spark.sql.shuffle.partitions`` when None)."""
+    rcols = [F.col(c) for c in cols]
     if num_ranges:
-        out = df.repartitionByRange(num_ranges, *cols)
-    else:
-        out = df.repartitionByRange(*cols)
-    return out.sortWithinPartitions(*cols)
+        return df.repartitionByRange(num_ranges, *rcols)
+    return df.repartitionByRange(*rcols)
 
 
 def write_cluster(

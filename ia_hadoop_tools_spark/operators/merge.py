@@ -5,12 +5,24 @@ mapreduce/SortMergeInputFormat.java:235-312 — N pre-sorted clusters are heap-
 merged into a new cluster, with optional filtering, exact dedup, and day-limit
 capping applied during the merge.
 
-Spark has no "scan preserves order across files" contract, so the merge is
-``unionByName`` -> filters -> dedup -> day-limit -> range-repartition + sort
-(SURVEY.md §7.4: accept the re-sort; Tungsten sort + AQE make it cheap, and
-the shuffle is the same one the reference's reduce phase pays). Catalyst pushes
-the filters below the union into each source scan — filter-during-merge comes
-free.
+Spark has no "scan preserves order across files" contract, so the merge
+re-sorts (SURVEY.md §7.4: accept the re-sort; the shuffle is the same one the
+reference's reduce phase pays). Operator order:
+
+``unionByName`` -> filters -> range-partition on the key alone -> dedup ->
+day-limit -> sort within partitions on ``sort_cols``.
+
+One shuffle in all: a range partitioning on the key already places every
+(whole row) duplicate and every (key, day) group in one partition, so dedup
+and the day-limit window plan no exchange of their own. Without dedup and
+day-limit the merge is :func:`~.cluster.build_cluster` (range on all of
+``sort_cols``). Catalyst pushes the filters below the union into each source
+scan — filter-during-merge comes free.
+
+Layout: with dedup or a day limit, a key never straddles two files of the
+merged cluster. The price is skew: the largest partition holds at least the
+hottest key's rows (after dedup and the day limit), however many ranges are
+asked for.
 """
 
 from __future__ import annotations
@@ -19,7 +31,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
-from ia_hadoop_tools_spark.operators.cluster import build_cluster
+from ia_hadoop_tools_spark.operators.cluster import build_cluster, range_partition
 from ia_hadoop_tools_spark.operators.daylimit import day_limit
 from ia_hadoop_tools_spark.operators.dedup import dedup_exact
 
@@ -52,12 +64,15 @@ def merge_clusters(
         merged = merged.unionByName(c)
     for f in filters:
         merged = merged.transform(f)
-    if dedup:
-        merged = dedup_exact(merged)
-    # `if daily_limit` (not `is not None`): the reference's
+    # `daily_limit` truthiness (not `is not None`): the reference's
     # cdx.daily.limit=0 means UNLIMITED (GlobalWaybackMergeMapper gates
     # the whole block with `if (dayLimit != 0)`) — treating 0 as "keep
     # zero rows" would silently empty a ported job's output
+    if not (dedup or daily_limit):
+        return build_cluster(merged, num_ranges, sort_cols)
+    merged = range_partition(merged, num_ranges, sort_cols[:1])
+    if dedup:
+        merged = dedup_exact(merged)
     if daily_limit:
         merged = day_limit(
             merged,
@@ -66,4 +81,4 @@ def merge_clusters(
             ts_col=sort_cols[1],
             tiebreakers=tiebreakers,
         )
-    return build_cluster(merged, num_ranges, sort_cols)
+    return merged.sortWithinPartitions(*sort_cols)

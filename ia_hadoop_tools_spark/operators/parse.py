@@ -1,7 +1,10 @@
 """Text-boundary parsers: CDX lines and Heritrix crawl logs -> typed DataFrames.
 
 Everything here is pure column expressions (whole-stage-codegen friendly); no
-Python UDFs. Reference semantics re-expressed:
+Python UDFs. Each parser tokenizes a line ONCE: its typed columns come out of
+a one-row generator (:func:`_typed_once`), a plan node later filters cannot be
+pushed below, so a downstream predicate reads the typed column instead of
+re-splitting the line. Reference semantics re-expressed:
 
 - ``parse_cdx`` = pig/CDXLoader.java:55-138 + mapreduce/CDXMapper.java:72-135:
   header-line skip, '-' -> null, trailing-CR strip, unescaped-space-in-redirect
@@ -15,6 +18,8 @@ Python UDFs. Reference semantics re-expressed:
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +49,20 @@ def read_cdx_text(spark: SparkSession, paths) -> DataFrame:
     return spark.read.option("lineSep", "\n").text(paths)
 
 
+def _typed_once(df: DataFrame, cols: Sequence[Column]) -> DataFrame:
+    """``df.select(*cols)`` behind a barrier to predicate pushdown.
+
+    Catalyst pushes a filter through a plain projection by substituting the
+    projected expressions into the predicate. Over a parser that means every
+    later filter on a typed column re-tokenizes the line: a
+    parse_cdx -> cdx_filter -> global_wayback_filter plan held 52 copies of
+    the split. ``inline`` of a one-element array is a one-row generator, and
+    predicates on a generator's output stay above it, so the tokenizer runs
+    once per line. Schema and nullability are those of the plain select.
+    """
+    return df.select(F.inline(F.array(F.struct(*cols))))
+
+
 def _nullif_dash(col: Column) -> Column:
     return F.when(col == "-", F.lit(None).cast("string")).otherwise(col)
 
@@ -61,6 +80,9 @@ def parse_cdx(df: DataFrame, value_col: str = "value", variant: str = "auto") ->
 
     Lines whose token count is below the minimum for the layout are dropped
     (the reference's loaders return null tuples for them).
+
+    The typed columns come out of :func:`_typed_once`: a filter on them reads
+    the parsed value, and only the token-count filter above repeats the split.
     """
     v = F.col(value_col)
     # Header-line skip (" CDX N b a m s k r M S V g") + trailing-CR strip.
@@ -134,7 +156,7 @@ def parse_cdx(df: DataFrame, value_col: str = "value", variant: str = "auto") ->
         elif name in ("compressed_length", "compressed_offset"):
             c = c.try_cast("long")
         out.append(c.alias(name))
-    return df.select(*out)
+    return _typed_once(df, out)
 
 
 def cdx_to_text(df: DataFrame) -> DataFrame:
@@ -207,7 +229,7 @@ def parse_cdxj(df: DataFrame, value_col: str = "value") -> DataFrame:
         elif name in ("compressed_length", "compressed_offset"):
             c = c.try_cast("long")
         out.append(c.alias(name))
-    return df.filter(F.size(v) >= 3).select(*out)
+    return _typed_once(df.filter(F.size(v) >= 3), out)
 
 
 def parse_crawllog(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -217,6 +239,7 @@ def parse_crawllog(df: DataFrame, value_col: str = "value") -> DataFrame:
     CRAWLLOG_SCHEMA. Field 8 is ``start_time+duration`` (split on '+'); '-'
     yields nulls for both. A non-numeric size becomes -1
     (pig/CrawlLogLoader.java:60-99). Lines with <12 fields are dropped.
+    The columns come out of :func:`_typed_once`, as in :func:`parse_cdx`.
     """
     # strip a trailing \r first (CrawlLogLoader.java:44-46): CRLF input
     # read with lineSep="\n" would otherwise leave \r glued to the last
@@ -259,7 +282,7 @@ def parse_crawllog(df: DataFrame, value_col: str = "value") -> DataFrame:
             "annotations"
         ),
     ]
-    out = df.select(*cols)
+    out = _typed_once(df, cols)
     assert [f.name for f in CRAWLLOG_SCHEMA.fields] == out.columns
     return out
 

@@ -384,7 +384,36 @@ COMMENTARY = {
         "groupBy. Lattices are bounded by max_word_len chunking, which "
         "is also what makes the oracle's fixed-depth SQL DP exist."
     ),
+    # --- CDX index write path (parse -> filters -> day limit; merge) ---
+    "cdx_index": (
+        "The cluster build's write path, parse_cdx -> cdx_filter -> "
+        "global_wayback_filter -> day_limit: the line is tokenized in ONE "
+        "projection (plus the token-count filter) under the `Generate "
+        "inline(...)` barrier, and every filter above it reads the typed "
+        "columns. Without the barrier Catalyst substituted "
+        "`split(regexp_replace(value, ...))` into each pushed-down "
+        "predicate (52 copies)."
+    ),
+    "merge_daylimit": (
+        "merge_clusters with a day limit is ONE `Exchange "
+        "rangepartitioning` on the key alone: the day-limit window's "
+        "(key, day) distribution (and dedup's whole-row one) is already "
+        "satisfied, so `WindowGroupLimit` + `Window` + the final "
+        "within-partition sort run in the exchange's reduce stage. A key "
+        "never straddles two output files."
+    ),
 }
+
+
+def _cdx_index(spark, _sf_dir):
+    """The cluster build's index pipeline over the registry's CDX lines."""
+    from ia_hadoop_tools_spark.driver_queries import CDX_FIXTURE_LINES
+    from ia_hadoop_tools_spark.operators.daylimit import day_limit
+    from ia_hadoop_tools_spark.operators.filters import cdx_filter, global_wayback_filter
+    from ia_hadoop_tools_spark.operators.parse import parse_cdx
+
+    lines = spark.createDataFrame([(l,) for l in CDX_FIXTURE_LINES], "value: string")
+    return day_limit(global_wayback_filter(cdx_filter(parse_cdx(lines))), n=5)
 
 
 def main() -> None:
@@ -392,7 +421,7 @@ def main() -> None:
     from ia_hadoop_tools_spark.pending_queries import PENDING_QUERIES
     from ia_hadoop_tools_spark.session import get_spark
 
-    QUERIES = {**_REGISTRY, **PENDING_QUERIES}
+    QUERIES = {**_REGISTRY, **PENDING_QUERIES, "cdx_index": _cdx_index}
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     out = [

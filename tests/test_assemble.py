@@ -412,6 +412,19 @@ def test_verify_corpus_version_ok_and_detects_lost_leaf(spark, tmp_path):
     assert rep2["checks"]["ids_unique"]
 
 
+def test_verify_corpus_version_empty_split(spark, tmp_path):
+    """A split the manifest records with 0 rows has no rows to group:
+    counts_match must still hold (it used to fail every such version)."""
+    from ia_hadoop_tools_spark.operators.assemble import verify_corpus_version
+
+    root = str(tmp_path / "versions")
+    assemble_corpus(_docs(spark, 40), root, [("train", 1.0), ("val", 0.0)], n_shards=2)
+    assert read_manifest(root)["counts"] == {"train": 40, "val": 0}
+    rep = verify_corpus_version(spark, root)
+    assert rep["ok"], rep
+    assert rep["counts"] == {"train": 40, "val": 0}
+
+
 def test_corpus_verify_cli(spark, tmp_path, capsys):
     from ia_hadoop_tools_spark.operators.assemble import assemble_corpus
     from ia_hadoop_tools_spark.__main__ import main

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ia_hadoop_tools_spark.operators.cluster import build_cluster, cluster_range, write_cluster
@@ -255,3 +257,97 @@ def test_incremental_cycle_dedups_staged_basenames(spark, tmp_path):
     )
     assert sorted(r.urlkey for r in merged.collect()) == ["k1", "k2"]
     assert [r.basename for r in new_included.collect()] == ["a.cdx"]
+
+
+def _executed_shuffles(df) -> list[str]:
+    """The shuffle Exchanges of ``df``'s executed (final adaptive) plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()  # noqa: SLF001
+    return re.findall(r"(?<!Broadcast)Exchange (.*)", plan.toString())
+
+
+def _burst_clusters(spark):
+    """Two inputs: one hot key holding most rows in same-second bursts,
+    duplicates across the inputs, and cold keys over several days."""
+    rows = []
+    for i in range(60):  # hot key, 3 days, 2-row same-second bursts
+        rows.append(("hot", f"2020010{1 + i % 3}0000{i // 6:02d}", f"d{i % 4}", i % 7))
+    for k in range(12):
+        for j in range(3):
+            rows.append((f"k{k:02d}", f"2020010{1 + j}120000", None if j else "x", j))
+    schema = "urlkey: string, timestamp: string, digest: string, offset: long"
+    c1 = spark.createDataFrame(rows[::2] + rows[:10], schema)
+    c2 = spark.createDataFrame(rows[1::2] + rows[:10] + rows[-5:], schema)
+    return c1, c2
+
+
+def _py_merge(rows, dedup, daily_limit):
+    """Plain-Python merge: dedup, then day_limit's default order
+    (timestamp, then the other columns by name, nulls first)."""
+    if dedup:
+        rows = sorted(set(rows), key=repr)
+    if not daily_limit:
+        return sorted(rows, key=repr)
+    cols = ("urlkey", "timestamp", "digest", "offset")
+    ties = sorted(c for c in cols if c not in ("urlkey", "timestamp"))
+
+    def order(r):
+        d = dict(zip(cols, r))
+        return [d["timestamp"]] + [(d[c] is not None, d[c]) for c in ties]
+
+    groups = {}
+    for r in rows:
+        groups.setdefault((r[0], r[1][:8]), []).append(r)
+    kept = [r for g in groups.values() for r in sorted(g, key=order)[:daily_limit]]
+    return sorted(kept, key=repr)
+
+
+def _files_sorted_and_key_disjoint(path) -> bool:
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".parquet"):
+            continue
+        t = pq.read_table(os.path.join(path, f), columns=["urlkey", "timestamp"])
+        keys = list(zip(t.column("urlkey").to_pylist(), t.column("timestamp").to_pylist()))
+        if not keys:
+            continue
+        if keys != sorted(keys):
+            return False
+        ranges.append((keys[0][0], keys[-1][0]))
+    ranges.sort()
+    return all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+
+
+@pytest.mark.parametrize(
+    "dedup,daily_limit", [(True, 2), (False, 2), (True, None)]
+)
+def test_merge_one_shuffle_matches_python_reference(spark, tmp_path, dedup, daily_limit):
+    """With dedup or a day limit the merge range-partitions once on the key
+    and dedup + the day-limit window reuse that partitioning: one Exchange.
+    Rows equal a plain-Python merge; every file is sorted and no key
+    straddles two files, even with one key holding most rows."""
+    c1, c2 = _burst_clusters(spark)
+    inputs = [tuple(r) for r in c1.collect() + c2.collect()]
+    merged = merge_clusters([c1, c2], dedup=dedup, daily_limit=daily_limit, num_ranges=4)
+    shuffles = _executed_shuffles(merged)
+    assert len(shuffles) == 1, shuffles
+    assert shuffles[0].startswith("rangepartitioning(urlkey"), shuffles
+    assert "timestamp" not in shuffles[0], shuffles
+    got = sorted((tuple(r) for r in merged.collect()), key=repr)
+    assert got == _py_merge(inputs, dedup, daily_limit)
+    out = str(tmp_path / "merged")
+    merged.write.parquet(out)
+    assert _files_sorted_and_key_disjoint(out)
+
+
+def test_merge_without_dedup_or_daylimit_keeps_build_cluster_plan(spark):
+    """Neither option: the merge is build_cluster of the union — one range
+    shuffle on every sort column."""
+    c1, c2 = _burst_clusters(spark)
+    merged = merge_clusters([c1, c2], num_ranges=4)
+    shuffles = _executed_shuffles(merged)
+    assert len(shuffles) == 1, shuffles
+    assert re.match(r"rangepartitioning\(urlkey#\d+ ASC NULLS FIRST, timestamp", shuffles[0])
+    assert merged.count() == c1.count() + c2.count()

@@ -10,6 +10,12 @@ from ia_hadoop_tools_spark.operators.parse import (
     parse_crawllog,
 )
 
+CRAWLLOG_LINE = (
+    "2012-01-03T08:45:08.123Z 200 5612 http://example.com/x LLE "
+    "http://example.com/ text/html #042 20120103084507123+456 "
+    "sha1:ABCDEF GO duplicate:digest"
+)
+
 
 def test_parse_cdx_plain_and_header_skip(cdx_lines_df):
     rows = parse_cdx(cdx_lines_df).orderBy("urlkey").collect()
@@ -63,12 +69,7 @@ def test_cdx_roundtrip_text(cdx_lines_df):
 
 
 def test_parse_crawllog(spark):
-    line = (
-        "2012-01-03T08:45:08.123Z 200 5612 http://example.com/x LLE "
-        "http://example.com/ text/html #042 20120103084507123+456 "
-        "sha1:ABCDEF GO duplicate:digest"
-    )
-    df = spark.createDataFrame([(line,)], "value: string")
+    df = spark.createDataFrame([(CRAWLLOG_LINE,)], "value: string")
     r = parse_crawllog(df).collect()[0]
     assert r.status == 200
     assert r.size == 5612
@@ -365,3 +366,36 @@ def test_fsio_rename_rejects_cross_filesystem(tmp_path, monkeypatch):
     # same-filesystem rename still works, scheme'd or bare
     fsio.rename(str(src), str(tmp_path / "b.txt"))
     assert (tmp_path / "b.txt").read_text() == "x"
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+
+
+def test_cdx_index_pipeline_tokenizes_each_line_once(cdx_lines_df):
+    """Filters on parse_cdx's typed columns must not re-split the line:
+    Catalyst pushes a predicate through a plain projection by substituting
+    the tokenizer into it (52 copies in this pipeline before the barrier).
+    Two are left: the projection and the token-count filter."""
+    from ia_hadoop_tools_spark.operators.filters import (
+        cdx_filter,
+        global_wayback_filter,
+    )
+
+    plan = _optimized(global_wayback_filter(cdx_filter(parse_cdx(cdx_lines_df))))
+    assert plan.count("regexp_replace(") <= 2, plan
+    assert plan.count("split(") <= 2, plan
+
+
+def test_crawllog_filters_tokenize_each_line_once(spark):
+    df = spark.createDataFrame([(CRAWLLOG_LINE,)], "value: string")
+    out = (
+        parse_crawllog(df)
+        .filter("status = 200")
+        .filter("size > 0")
+        .filter("content_type LIKE 'text/%'")
+        .filter("annotations IS NOT NULL")
+    )
+    plan = _optimized(out)
+    assert plan.count("regexp_replace(") <= 2, plan
+    assert out.count() == 1
