@@ -264,12 +264,12 @@ def cmd_range_dumper(args):
     """range-dumper (cdx/HDFSRangeDumper.java:20-107): PATH[\tOFF\tLEN] lines
     on stdin -> decompressed lines of each byte range on stdout.
 
-    Decompression is member-by-member via the zipnum salvage helper (the
+    Decompression is member-by-member via the zipnum member walker (the
     reference streamed members the same way): a range cutting the LAST
     member short still dumps every complete member before it, and a
     truncated tail raises neither EOFError nor zlib.error (both of which
     escape a bare ``except OSError``). Non-gzip payloads pass through."""
-    from ia_hadoop_tools_spark.sources.zipnum import _gunzip_salvage
+    from ia_hadoop_tools_spark.sources.zipnum import gzip_members
 
     for line in sys.stdin:
         parts = line.rstrip("\n").split("\t")
@@ -281,7 +281,7 @@ def cmd_range_dumper(args):
             else:
                 payload = fh.read()
         if payload[:2] == b"\x1f\x8b":
-            text, _truncated = _gunzip_salvage(payload)
+            text = "".join(t for _off, t, _clean in gzip_members([payload]))
         else:
             text = payload.decode(errors="replace")
         sys.stdout.write(text)

@@ -39,6 +39,9 @@ DAMP_NUM, DAMP_DEN = 85, 100
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
+# pagerank(cache_edges=None) leaf budget in maxPartitionBytes splits
+PR_CACHE_LEAF_SPLITS = 8  # measurements: _edges_exceed_lazy_budget
+
 
 def _node_col(df: DataFrame, name: str):
     """Validated bigint node-id column. Non-integral ids (e.g. host
@@ -88,9 +91,8 @@ def _edges_exceed_lazy_budget(edges: DataFrame) -> bool:
     ensure_min_partitions / bloom._needs_mask_reduce technique; an
     ``.rdd`` probe would execute upstream AQE stages at plan-build time).
 
-    Threshold: ``$SPARK_GRAFT_PR_CACHE_LEAF_BYTES`` or
-    8 x maxPartitionBytes (1 GiB at the default 128 MB split).  Measured
-    bounds for the crossover (scripts/probe_pagerank_cache_r12.py, the
+    Threshold: ``PR_CACHE_LEAF_SPLITS`` (8) x maxPartitionBytes (1 GiB
+    at the default 128 MB split).  Measured bounds for the crossover (scripts/probe_pagerank_cache_r12.py, the
     registry part<->supplier graph, 5 supersteps, 8 GB heap): 21 MB
     leaves (sf0.1) lazy wins x1.2-1.65 (round-11 A/B); 213 MB (sf1)
     parity (lazy 20.4 s / cached 19.7 s med); 2.1 GB (sf10) the lazy
@@ -98,26 +100,24 @@ def _edges_exceed_lazy_budget(edges: DataFrame) -> bool:
     subtrees execute concurrently within one action and exhaust
     execution memory — while the cached shape completes in ~95 s.  Any
     budget inside (256 MB, 2 GB) satisfies the measurements; 1 GiB is
-    the midpoint and scales with the configured split size.  Unknown-
-    size leaves (cached/RDD-backed plans carry Long.Max estimates) and
-    probe failures stay LAZY, the measured-faster local shape
-    (re-scanning an already-materialized input reads a cache)."""
-    import os
-
+    the midpoint and scales with the configured split size.  A cached
+    leaf (``InMemoryRelation``) adds nothing: a re-scan reads the cache.
+    Unknown-size leaves (RDD-backed: Long.Max estimates) and probe
+    failures stay LAZY, the measured-faster local shape."""
     try:
         from ia_hadoop_tools_spark.operators.textops import (
             _max_partition_bytes,
         )
 
-        raw = os.environ.get("SPARK_GRAFT_PR_CACHE_LEAF_BYTES")
-        budget = (
-            int(raw) if raw else 8 * _max_partition_bytes(edges)
-        )
+        budget = PR_CACHE_LEAF_SPLITS * _max_partition_bytes(edges)
         unknown = 1 << 62  # Long.Max-ish sentinel for statless leaves
         leaves = edges._jdf.queryExecution().optimizedPlan().collectLeaves()
         total = 0
         for i in range(leaves.size()):
-            n = int(str(leaves.apply(i).stats().sizeInBytes()))
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "InMemoryRelation":
+                continue  # already cached: a re-scan reads the cache
+            n = int(str(leaf.stats().sizeInBytes()))
             if n >= unknown:
                 return False
             total += n
@@ -170,8 +170,8 @@ def pagerank(
     ``True`` when checkpoints/convergence split the run into multiple
     actions (``materialize_every``/``epsilon``), where exchange reuse
     stops and the cache pays for itself, OR when the edge plan's LEAF
-    size estimates exceed a budget (8 x maxPartitionBytes, ~1 GiB, by
-    default; ``$SPARK_GRAFT_PR_CACHE_LEAF_BYTES`` overrides) — at that
+    size estimates exceed a budget (``PR_CACHE_LEAF_SPLITS`` = 8 x
+    maxPartitionBytes, ~1 GiB at the default split) — at that
     size the lazy shape's ~2x-per-superstep re-execution of the edge
     pipeline re-pays the dominant scan+shuffle every iteration, and
     measured at sf10 it exhausts execution memory outright (see
@@ -179,9 +179,9 @@ def pagerank(
     action the duplicated subtrees are cheap codegen pipelines running
     concurrently, and persisting measured ~20% SLOWER at bench SFs (the
     InMemoryRelation materialization serializes the run — round-11 A/B).
-    Unknown-size leaves (cached/RDD-backed: Long.Max estimates) stay
-    lazy: such inputs are already materialized by their producer, so a
-    re-scan reads a cache, not storage.  The decision costs zero jobs
+    Cached leaves add nothing to the budget and unknown-size (RDD-backed:
+    Long.Max) leaves keep the lazy shape: a re-scan of such an input
+    reads a cache, not storage.  The decision costs zero jobs
     (optimizer leaf stats only) and is visible in the plan
     (InMemoryRelation appears only above the threshold).
 

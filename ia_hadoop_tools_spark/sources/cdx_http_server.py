@@ -50,8 +50,7 @@ import math
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from ia_hadoop_tools_spark.sources import fsio
-from ia_hadoop_tools_spark.sources.zipnum import _gunzip_salvage
+from ia_hadoop_tools_spark.sources.zipnum import read_lines, read_summary_rows
 
 NUM_PAGES_HEADER = "X-CDX-Num-Pages"  # HttpTextLoader.java:60
 CLUSTER_URI_HEADER = "X-CDX-Cluster-Uri"  # HttpTextLoader.java:61
@@ -87,8 +86,6 @@ class ClusterPager:
     """
 
     def __init__(self, cluster_dir: str, filesystem=None):
-        from ia_hadoop_tools_spark.sources.zipnum import read_summary_rows
-
         self.cluster_dir = cluster_dir
         self.filesystem = filesystem
         # the ONE shared summary TSV parse — hand-rolling it here would
@@ -161,9 +158,10 @@ class ClusterPager:
         lo, hi = self.prune(urlkey, urlkey + "!")
         target = _ts14_seconds(pad_closest_ts(ts))
         scored = []
-        for line in self.deref_lines(
-            self.blocks[lo:hi], urlkey, urlkey + "!"
-        ).splitlines():
+        for line in read_lines(
+            self.cluster_dir, self.blocks[lo:hi], urlkey, urlkey + "!",
+            filesystem=self.filesystem,
+        ):
             parts = line.split(" ", 2)
             if len(parts) < 2 or parts[0] != urlkey:
                 continue
@@ -183,23 +181,12 @@ class ClusterPager:
         self, blocks, start: str | None, end: str | None
     ) -> str:
         """Ranged-read + gunzip each block; bound lines to [start, end) by
-        their ``urlkey timestamp`` prefix (same rule as zipnum._read_blocks)."""
-        out: list[str] = []
-        for _key, shard, off, length in blocks:
-            path = fsio.join(self.cluster_dir, shard)
-            payload = fsio.read_range(path, off, length, self.filesystem)
-            text, clean = _gunzip_salvage(payload)
-            if not clean:
-                raise OSError(f"corrupt gzip member in {shard} at {off}")
-            for line in text.splitlines():
-                if start is not None or end is not None:
-                    k = " ".join(line.split(" ", 2)[:2])
-                    if start is not None and k < start:
-                        continue
-                    if end is not None and k >= end:
-                        continue
-                out.append(line + "\n")
-        return "".join(out)
+        their ``urlkey timestamp`` prefix (the codec's one read loop:
+        records framed by ``\\n`` only, a corrupt block raises)."""
+        lines = read_lines(
+            self.cluster_dir, blocks, start, end, filesystem=self.filesystem
+        )
+        return "".join(line + "\n" for line in lines)
 
 
 class CDXClusterHandler(BaseHTTPRequestHandler):

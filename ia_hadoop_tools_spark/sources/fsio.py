@@ -81,6 +81,23 @@ def read_range(path: str, offset: int, length: int, filesystem=None) -> bytes:
         return fh.read(length)
 
 
+def read_range_chunks(
+    path: str, offset: int, length: int, chunk_size: int, filesystem=None
+):
+    """:func:`read_range` as a stream of reads of at most ``chunk_size``
+    bytes: one open and one seek, memory of one chunk however long the
+    range. Raises ``EOFError`` where the file ends inside the range."""
+    fs, p = resolve(path, filesystem)
+    with fs.open_input_file(p) as fh:
+        fh.seek(offset)
+        while length > 0:
+            data = fh.read(min(chunk_size, length))
+            if not data:
+                raise EOFError(f"{path}: range ends {length} bytes past EOF")
+            length -= len(data)
+            yield data
+
+
 def open_write(path: str, filesystem=None):
     """Binary output stream (buffered)."""
     fs, p = resolve(path, filesystem)

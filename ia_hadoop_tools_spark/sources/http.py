@@ -157,9 +157,7 @@ def read_http_zipnum_deref(
     twice: the server prunes index pages, and each task re-bounds emitted
     lines. Returns DataFrame(value), rows identical to ``zipnum_range``.
     """
-    from pyspark.sql import Row
-
-    from ia_hadoop_tools_spark.sources.zipnum import _read_blocks
+    from ia_hadoop_tools_spark.sources.zipnum import read_lines
 
     push: dict[str, str] = {"showPagedIndex": "true"}
     if start is not None:
@@ -185,7 +183,7 @@ def read_http_zipnum_deref(
     )
     acc = spark.sparkContext.accumulator(0) if skip_bad else None
 
-    def deref(pages) -> "list[Row]":
+    def deref(pages) -> Iterator[tuple[str]]:
         for page in pages:
             page_url = _with_params(base, {"page": str(int(page))})
             req = urllib.request.Request(page_url)
@@ -193,21 +191,10 @@ def read_http_zipnum_deref(
                 req.add_header("Cookie", ck)
             with urllib.request.urlopen(req, timeout=to) as resp:
                 text = resp.read().decode("utf-8", errors="replace")
-            rows = []
-            for line in text.split("\n"):
-                if not line:
-                    continue
-                key, shard, off, length = line.split("\t")
-                rows.append(
-                    Row(
-                        summary_key=key, shard=shard,
-                        offset=int(off), length=int(length),
-                    )
-                )
-            yield from _read_blocks(
-                d, iter(rows), s, e, skip_bad=sb, bad_acc=acc,
-                filesystem=fs_obj,
-            )
+            rows = [line.split("\t") for line in text.split("\n") if line]
+            blocks = [(shard, int(o), int(n)) for _k, shard, o, n in rows]
+            for line in read_lines(d, blocks, s, e, sb, acc, fs_obj):
+                yield (line,)
 
     rdd = (
         spark.sparkContext.parallelize(range(num_pages), num_pages)

@@ -52,8 +52,8 @@ class _HttpRandomAccessFile(io.RawIOBase):
 
     Each ``read`` issues one bounded range request — the positioned-read
     contract HDFSBlockLoader/PetaboxFileSystem rely on; callers (the ZipNum
-    codec etc.) read in block-sized chunks, so request count tracks block
-    count, not byte count.
+    codec etc.) read in bounded chunks (``zipnum.READ_CHUNK_BYTES``), so
+    request count tracks bytes / chunk size, and memory stays one chunk.
     """
 
     def __init__(self, url: str, size: int, timeout: float = 60.0):

@@ -14,11 +14,14 @@ This is the one operator family Spark genuinely lacks, implemented with
   written executor-side with the reference's TMP+atomic-rename protocol
   (jobs/CDXGenerator.java:123-136); idx entries come back as the job result
   (not a side channel), ALL.summary is their sorted projection.
-- ``read_zipnum``: idx-driven ranged reads — each task opens only its blocks'
-  byte ranges (the GZIPRangeLineDereferencingRecordReader pattern).
-- ``zipnum_range``: bounded [start, end) scan that prunes to covering blocks
-  via the summary BEFORE any data I/O — the reference's binary search over
-  ALL.summary expressed as a DataFrame filter over the idx table.
+- ``plan_blocks`` + ``read_block_lines``: the ONE ZipNum reader. The
+  planner streams ``ALL.summary`` and keeps the blocks whose key range can
+  intersect ``[start, end)`` — the reference's binary search over the
+  summary (cdx/CDXCluster.java:31-43) — coalesced into byte-balanced spans;
+  the read loop streams each span with one ranged open and gunzips it
+  member by member (the GZIPRangeLineDereferencingRecordReader pattern).
+  ``zipnum_range``/``read_zipnum``, the ``zipnum`` DataSource, the CDX HTTP
+  server and the HTTP deref reader all read through these two.
 
 The native engine stores clusters as sorted Parquet (operators/cluster.py);
 this codec exists for interchange with Wayback-era tooling, and its envelope
@@ -28,7 +31,11 @@ structure (3000-line members) is preserved byte-semantically.
 from __future__ import annotations
 
 import gzip
+import logging
+import zlib
 from collections.abc import Iterator
+from functools import partial
+from itertools import chain
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -284,7 +291,6 @@ def block_lines(text: str) -> list[str]:
     ``_write_shard``); ``str.splitlines()`` would also split on
     ``\\x0b``/``\\x0c``/``\\x85``/U+2028/U+2029 INSIDE a value, so a line
     carrying one of those bytes would read back as two corrupt rows.
-    Shared by ``_read_blocks`` and the ``zipnum`` DataSource reader.
     """
     lines = text.split("\n")
     if lines and lines[-1] == "":
@@ -312,97 +318,232 @@ def read_summary_rows(
     return list(iter_summary_rows(cluster_dir, filesystem))
 
 
-def _gunzip_salvage(payload: bytes) -> tuple[str, bool]:
-    """Decompress concatenated gzip members, salvaging what precedes any
-    corruption.
+READ_CHUNK_BYTES = 1 << 18  # span read size: a few members per read
+_GZIP_MAGIC = b"\x1f\x8b\x08"  # ID1 ID2 CM=deflate opens every member
 
-    Returns ``(text, clean)``. On a corrupt/truncated member the reference
-    degrades to EOF after two attempts rather than failing the task
-    (mapreduce/GZIPRangeLineDereferencingRecordReader.java:94-109,
-    streaming/GzipSingleFileRecordReader.java:89-113); here the complete
-    members before the bad one are kept, plus the bad member's output up to
-    its last complete line.
+
+def gzip_members(chunks) -> Iterator[tuple[int, str, bool]]:
+    """Yield ``(offset, text, clean)`` for each gzip member of the byte
+    stream ``chunks``; boundaries come from the bytes (``unused_data``),
+    so memory is one chunk plus one member.
+
+    A damaged member is yielded once with ``clean=False``: cut short by
+    the stream's end it keeps its complete lines (the reference degrades
+    to EOF: mapreduce/GZIPRangeLineDereferencingRecordReader.java:94-109),
+    failing to inflate or its CRC it keeps none. The walk then resyncs at
+    the next gzip header past the damaged member's start, keeping only
+    members that inflate whole — so a corrupt member costs only its own
+    block, and header-like bytes inside deflate data are passed over.
     """
-    import zlib
-
-    try:
-        return gzip.decompress(payload).decode("utf-8"), True
-    except (OSError, EOFError, zlib.error, UnicodeDecodeError):
-        pass
-    parts: list[bytes] = []
-    data = payload
-    while data:
+    chunks = iter(chunks)
+    pending, pos, resyncing = b"", 0, False
+    while True:
+        if not pending:
+            pending = next(chunks, b"")
+            if not pending:
+                return
         d = zlib.decompressobj(zlib.MAX_WBITS | 16)
-        try:
-            out = d.decompress(data)
-        except zlib.error:
-            break
-        parts.append(out)
-        if not d.eof:  # truncated mid-member
-            break
-        data = d.unused_data
-    text = b"".join(parts).decode("utf-8", errors="replace")
-    # drop a trailing partial line — it was cut mid-record
-    if text and not text.endswith("\n"):
-        nl = text.rfind("\n")
-        text = text[: nl + 1] if nl >= 0 else ""
-    return text, False
+        fed, out, data, whole = [], [], pending, False
+        while data:
+            fed.append(data)
+            try:
+                out.append(d.decompress(data))
+            except zlib.error:
+                break
+            if d.eof:
+                whole = True
+                break
+            data = next(chunks, b"")
+        raw = b"".join(out)
+        if whole:
+            pending = d.unused_data
+            try:
+                text, clean = raw.decode("utf-8"), True
+            except UnicodeDecodeError:
+                text, clean = raw.decode("utf-8", errors="replace"), False
+            yield pos, text, clean
+            pos += sum(map(len, fed)) - len(pending)
+            resyncing = False
+            continue
+        if not resyncing:
+            text = ""
+            if not data:  # the stream ended mid-member: keep whole lines
+                text = raw.decode("utf-8", errors="replace")
+                text = text[: text.rfind("\n") + 1]
+            yield pos, text, False
+        buf = b"".join(fed)
+        i = buf.find(_GZIP_MAGIC, 1)
+        while i < 0:
+            more = next(chunks, b"")
+            if not more:
+                return
+            keep = buf[max(1, len(buf) - 2) :]  # a header split by the read
+            pos += len(buf) - len(keep)
+            buf = keep + more
+            i = buf.find(_GZIP_MAGIC)
+        pending, pos, resyncing = buf[i:], pos + i, True
 
 
-def _read_blocks(
-    out_dir: str,
-    rows: Iterator[Row],
+Span = tuple[str, int, int]  # (shard, offset, length) of contiguous members
+
+
+def _pruned_blocks(rows, start: str | None, end: str | None):
+    """Stream (key, shard, off, len) rows -> kept (shard, off, len).
+
+    A block covers [its key, next block's key in the same shard); the
+    last block of a shard is kept conservatively (unknown upper key).
+    ``next_key >= start`` keeps a block whose tail may hold keys equal to
+    the next block's first key (duplicate keys spanning a boundary).
+    One-row lookahead, O(1) memory.
+
+    The pruning math ASSUMES rows arrive shard-grouped and
+    offset-ordered (write_zipnum's ALL.summary layout). An externally
+    produced summary violating that order would silently mis-prune —
+    next-key covering ranges would be wrong, and pruned blocks are never
+    read, so the row-level re-filter cannot repair the loss — so order
+    is validated while streaming and malformed summaries fail loudly
+    (O(shards) state, still never O(blocks)).
+    """
+    cur = None
+    seen_shards: set[str] = set()
+    for row in rows:
+        if cur is not None:
+            key, shard, off, length = cur
+            if row[1] == shard:
+                if row[2] <= off:
+                    raise ValueError(
+                        f"malformed ALL.summary: offset regressed in shard"
+                        f" {shard!r} ({off} -> {row[2]}); blocks must be"
+                        f" shard-grouped and offset-ordered"
+                    )
+                if row[0] < key:
+                    raise ValueError(
+                        f"malformed ALL.summary: key regressed in shard"
+                        f" {shard!r} ({key!r} -> {row[0]!r}); block keys"
+                        f" must be sorted"
+                    )
+                nxt = row[0]
+            else:
+                if row[1] in seen_shards:
+                    raise ValueError(
+                        f"malformed ALL.summary: shard {row[1]!r} reappears"
+                        f" after {shard!r}; blocks must be shard-grouped"
+                    )
+                seen_shards.add(shard)
+                nxt = None
+            if not (end is not None and key >= end) and not (
+                start is not None and nxt is not None and nxt < start
+            ):
+                yield shard, off, length
+        cur = row
+    if cur is not None:
+        key, shard, off, length = cur
+        if not (end is not None and key >= end):
+            yield shard, off, length
+
+
+def plan_blocks(
+    summary,
+    start: str | None,
+    end: str | None,
+    num_spans: int,
+) -> list[Span]:
+    """Prune to covering blocks and coalesce them into byte-balanced SPANS.
+
+    ``summary`` is a list of (key, shard, offset, length) rows or a
+    zero-arg factory of iterators over them (the streaming path). Two
+    streaming passes: (1) count kept blocks + bytes, (2) emit contiguous
+    same-shard spans of ~total/num_spans bytes. A span is
+    ``(shard, offset, length)``; :func:`read_block_lines` finds its
+    member boundaries in the bytes, so driver memory is O(spans + shards),
+    never O(blocks).
+    """
+    factory = summary if callable(summary) else (lambda: iter(summary))
+    total, n_blocks = 0, 0
+    for _, _, length in _pruned_blocks(factory(), start, end):
+        total += length
+        n_blocks += 1
+    if not n_blocks:
+        return []
+    target = max(1, total // max(1, min(num_spans, n_blocks)))
+    spans: list[Span] = []
+    for shard, off, length in _pruned_blocks(factory(), start, end):
+        if spans:
+            s_shard, s_off, s_len = spans[-1]
+            if s_shard == shard and s_off + s_len == off and s_len < target:
+                spans[-1] = (shard, s_off, s_len + length)
+                continue
+        spans.append((shard, off, length))
+    return spans
+
+
+def read_block_lines(
+    cluster_dir: str,
+    spans,
     start: str | None,
     end: str | None,
     skip_bad: bool = False,
     bad_acc=None,
     filesystem=None,
-) -> Iterator[Row]:
-    """Ranged-read + gunzip idx blocks; bound emitted lines to [start, end).
+) -> Iterator[list[str]]:
+    """Yield each block's lines bounded to ``[start, end)`` by their
+    ``urlkey timestamp`` prefix. ``spans`` are :func:`plan_blocks` spans
+    or summary rows ``(key, shard, offset, length)`` (one-block spans);
+    each is streamed from one open shard in reads of at most
+    ``READ_CHUNK_BYTES`` and walked by :func:`gzip_members`, so memory is
+    one read plus one block whatever the span size.
 
-    ``skip_bad`` is the reference's ``--skip-bad`` tolerance: corrupt or
-    truncated members are salvaged to their last complete line, counted in
-    ``bad_acc`` (a Spark accumulator) and logged, instead of failing the
-    task. Without it, corruption raises — a 100 TB job should not silently
-    lose data unless the operator asked for it.
+    ``skip_bad`` is the reference's ``--skip-bad`` tolerance: a corrupt,
+    truncated or unreadable member is salvaged to its last complete line,
+    counted in ``bad_acc`` (a Spark accumulator) and logged, instead of
+    failing. Without it, corruption raises — a 100 TB job should not
+    silently lose data unless the operator asked for it.
     """
-    import logging
-
     log = logging.getLogger(__name__)
-    for r in rows:
-        path = fsio.join(out_dir, r["shard"])
-        try:
-            payload = fsio.read_range(path, r["offset"], r["length"], filesystem)
-        except OSError:
-            if not skip_bad:
-                raise
-            log.warning("skip-bad: unreadable block %s@%s", r["shard"], r["offset"])
-            if bad_acc is not None:
-                bad_acc += 1
-            continue
-        text, clean = _gunzip_salvage(payload)
-        if not clean:
-            if not skip_bad:
-                raise IOError(
-                    f"corrupt gzip member in {r['shard']} at offset "
-                    f"{r['offset']} (len {r['length']}); pass skip_bad=True "
-                    f"to salvage"
+    bounded = start is not None or end is not None
+
+    def in_range(line: str) -> bool:
+        k = " ".join(line.split(" ", 2)[:2])
+        return (start is None or k >= start) and (end is None or k < end)
+
+    def bad(shard: str, off: int, what: str, n_lines: int = 0) -> None:
+        if not skip_bad:
+            raise IOError(f"{what} in {shard} at offset {off}; read with "
+                          f"skip_bad to salvage")
+        log.warning("skip-bad: %s in %s@%s, salvaged %d lines",
+                    what, shard, off, n_lines)
+        if bad_acc is not None:
+            bad_acc.add(1)
+
+    for *_key, shard, off, length in spans:
+        lost: list[Exception] = []
+
+        def chunks():
+            try:
+                yield from fsio.read_range_chunks(
+                    fsio.join(cluster_dir, shard), off, length,
+                    READ_CHUNK_BYTES, filesystem,
                 )
-            log.warning(
-                "skip-bad: corrupt member %s@%s, salvaged %d lines",
-                r["shard"], r["offset"], text.count("\n"),
-            )
-            if bad_acc is not None:
-                bad_acc += 1
-        for line in block_lines(text):
-            if start is not None or end is not None:
-                key = line.split(" ", 2)
-                k = " ".join(key[:2])
-                if start is not None and k < start:
-                    continue
-                if end is not None and k >= end:
-                    continue
-            yield Row(value=line)
+            except (OSError, EOFError) as e:  # unreadable or short shard
+                lost.append(e)
+
+        tail_clean = True
+        for rel, text, clean in gzip_members(chunks()):
+            tail_clean = clean
+            if not clean:
+                bad(shard, off + rel, "corrupt gzip member", text.count("\n"))
+            lines = block_lines(text)
+            if bounded:
+                lines = [line for line in lines if in_range(line)]
+            if lines:
+                yield lines
+        if lost and tail_clean:  # else the cut member was reported above
+            bad(shard, off, f"unreadable range ({lost[0]})")
+
+
+def read_lines(*args, **kwargs) -> Iterator[str]:
+    """:func:`read_block_lines` flattened to one line at a time."""
+    return chain.from_iterable(read_block_lines(*args, **kwargs))
 
 
 def read_zipnum(
@@ -452,16 +593,22 @@ def zipnum_range(
     cluster_dir: str,
     start: str | None,
     end: str | None,
-    num_tasks: int | None = None,
     skip_bad: bool = False,
     filesystem=None,
 ) -> DataFrame:
     """Bounded [start, end) scan over a ZipNum cluster.
 
-    Block pruning happens on the summary DataFrame before any data I/O: a
-    block is fetched iff its key range [summary_key, next_summary_key) can
-    intersect [start, end) — exactly CDXCluster.getRangeBlockIterator's
-    binary-search semantics (cdx/CDXCluster.java:31-43).
+    The driver streams ``ALL.summary`` through :func:`plan_blocks` before
+    any data I/O: a block is fetched iff its key range [summary_key,
+    next_summary_key) can intersect [start, end) — exactly
+    CDXCluster.getRangeBlockIterator's binary-search semantics
+    (cdx/CDXCluster.java:31-43). The kept blocks form ``defaultParallelism``
+    byte-balanced spans, one task each, read by :func:`read_block_lines`:
+    one job, one stage.
+
+    Planning happens at the CALL (a malformed summary raises
+    ``ValueError`` here), and the spans are frozen into the DataFrame: do
+    not reuse it after its cluster is rewritten.
 
     With ``skip_bad`` (the reference's ``--skip-bad``), corrupt members are
     salvaged + counted instead of failing the job; the skip count is exposed
@@ -470,37 +617,20 @@ def zipnum_range(
     recomputation can overcount, so treat it as an upper-bound signal,
     not an exact tally).
     """
-    from pyspark.sql import Window
+    sc = spark.sparkContext
+    spans = plan_blocks(
+        partial(iter_summary_rows, cluster_dir, filesystem), start, end,
+        sc.defaultParallelism,
+    )
+    acc = sc.accumulator(0) if skip_bad else None
 
-    summary = load_summary(spark, cluster_dir, filesystem)
-    if start is not None or end is not None:
-        # lead() partitioned BY SHARD, not globally: the global-order window
-        # would funnel the whole summary (1/3000 of the data — GBs at 100 TB)
-        # through one task. Shards are alphabetically contiguous, so within a
-        # shard the next block's key bounds this block exactly; each shard's
-        # LAST block gets a null next-key and is kept conservatively (at most
-        # one extra block fetched per shard).
-        w = Window.partitionBy("shard").orderBy("summary_key", "offset")
-        summary = summary.withColumn("__next_key", F.lead("summary_key").over(w))
-        if end is not None:
-            summary = summary.filter(F.col("summary_key") < end)
-        if start is not None:
-            summary = summary.filter(
-                F.col("__next_key").isNull() | (F.col("__next_key") >= start)
-            )
-        summary = summary.drop("__next_key")
-    if num_tasks:
-        summary = summary.repartition(num_tasks)
+    def loader(part: Iterator[Span]) -> Iterator[tuple[str]]:
+        for line in read_lines(
+            cluster_dir, part, start, end, skip_bad, acc, filesystem
+        ):
+            yield (line,)
 
-    s, e, d, sb, fs_obj = start, end, cluster_dir, skip_bad, filesystem
-    acc = spark.sparkContext.accumulator(0) if skip_bad else None
-
-    def loader(rows: Iterator[Row]) -> Iterator[Row]:
-        return _read_blocks(
-            d, rows, s, e, skip_bad=sb, bad_acc=acc, filesystem=fs_obj
-        )
-
-    rdd = summary.rdd.mapPartitions(loader)
+    rdd = sc.parallelize(spans, max(len(spans), 1)).mapPartitions(loader)
     df = spark.createDataFrame(rdd, "value: string")
     if acc is not None:
         df.skip_bad_count = acc

@@ -1,8 +1,9 @@
 """ZipNum as a first-class Spark data source (PySpark 4 Python DataSource).
 
 ``spark.read.format("zipnum").load(cluster_dir)`` — the idiomatic skin over
-the ZipNum codec (sources/zipnum.py): the cluster's ``ALL.summary``
-meta-index drives partition planning (one task per group of gzip members,
+the ZipNum codec (sources/zipnum.py), planned and read by the codec's own
+``plan_blocks``/``read_block_lines``: the cluster's ``ALL.summary``
+meta-index drives partition planning (one task per span of gzip members,
 balanced by compressed bytes), and urlkey range predicates push down into
 BLOCK PRUNING before any data I/O — the reference's binary search over the
 summary (cdx/CDXCluster.java:31-43) expressed through ``pushFilters``.
@@ -22,6 +23,7 @@ Register per session::
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
+from functools import partial
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -35,116 +37,19 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from ia_hadoop_tools_spark.sources.zipnum import (
+    Span,
+    iter_summary_rows,
+    plan_blocks,
+    read_block_lines,
+)
+
 ZIPNUM_READ_SCHEMA = "urlkey string, timestamp string, value string"
 
 
 class ZipNumBlocks(InputPartition):
-    def __init__(self, blocks: Sequence[tuple[str, int, int]]):
-        self.blocks = list(blocks)
-
-
-def _load_summary(cluster_dir: str, filesystem=None):
-    """Zero-arg FACTORY of summary-row iterators (plan_blocks streams the
-    meta-index twice; materializing it would hold ~300M tuples on the
-    driver at the 100 TB design point)."""
-    from ia_hadoop_tools_spark.sources.zipnum import iter_summary_rows
-
-    return lambda: iter_summary_rows(cluster_dir, filesystem)
-
-
-def _pruned_blocks(rows, start: str | None, end: str | None):
-    """Stream (key, shard, off, len) rows -> kept (shard, off, len).
-
-    A block covers [its key, next block's key in the same shard); the
-    last block of a shard is kept conservatively (unknown upper key).
-    One-row lookahead, O(1) memory. Mirrors zipnum_range's DataFrame
-    formulation (next_key >= start keeps boundary-duplicate keys).
-
-    The pruning math ASSUMES rows arrive shard-grouped and
-    offset-ordered (write_zipnum's ALL.summary layout). An externally
-    produced summary violating that order would silently mis-prune —
-    next-key covering ranges would be wrong, and pruned blocks are never
-    read, so the row-level re-filter cannot repair the loss — so order
-    is validated while streaming and malformed summaries fail loudly
-    (O(shards) state, still never O(blocks)).
-    """
-    cur = None
-    seen_shards: set[str] = set()
-    for row in rows:
-        if cur is not None:
-            key, shard, off, length = cur
-            if row[1] == shard:
-                if row[2] <= off:
-                    raise ValueError(
-                        f"malformed ALL.summary: offset regressed in shard"
-                        f" {shard!r} ({off} -> {row[2]}); blocks must be"
-                        f" shard-grouped and offset-ordered"
-                    )
-                if row[0] < key:
-                    raise ValueError(
-                        f"malformed ALL.summary: key regressed in shard"
-                        f" {shard!r} ({key!r} -> {row[0]!r}); block keys"
-                        f" must be sorted"
-                    )
-                nxt = row[0]
-            else:
-                if row[1] in seen_shards:
-                    raise ValueError(
-                        f"malformed ALL.summary: shard {row[1]!r} reappears"
-                        f" after {shard!r}; blocks must be shard-grouped"
-                    )
-                seen_shards.add(shard)
-                nxt = None
-            if not (end is not None and key >= end) and not (
-                start is not None and nxt is not None and nxt < start
-            ):
-                yield shard, off, length
-        cur = row
-    if cur is not None:
-        key, shard, off, length = cur
-        if not (end is not None and key >= end):
-            yield shard, off, length
-
-
-def plan_blocks(
-    summary,
-    start: str | None,
-    end: str | None,
-    num_partitions: int,
-) -> list[list[tuple[str, int, int]]]:
-    """Prune to covering blocks and coalesce into byte-balanced SPANS.
-
-    ``summary`` is a list of (key, shard, offset, length) rows or a
-    zero-arg factory of iterators over them (the streaming path). Two
-    streaming passes: (1) count kept blocks + bytes, (2) emit contiguous
-    same-shard spans of ~total/num_partitions bytes. Driver memory is
-    O(partitions + shards), never O(blocks) — the DataFrame path's own
-    scale note (zipnum.py: '~300M lines at 100 TB') applies to this
-    planner too. Spans are safe because adjacent gzip members
-    concatenate (the reader's _gunzip_salvage walks members).
-    """
-    factory = summary if callable(summary) else (lambda: iter(summary))
-    total, n_blocks = 0, 0
-    for _, _, length in _pruned_blocks(factory(), start, end):
-        total += length
-        n_blocks += 1
-    if not n_blocks:
-        return []
-    n = max(1, min(num_partitions, n_blocks))
-    target = max(1, total // n)
-    groups: list[list[tuple[str, int, int]]] = []
-    cur_shard, cur_off, cur_len = None, 0, 0
-    for shard, off, length in _pruned_blocks(factory(), start, end):
-        contiguous = shard == cur_shard and cur_off + cur_len == off
-        if contiguous and cur_len < target:
-            cur_len += length
-            continue
-        if cur_shard is not None:
-            groups.append([(cur_shard, cur_off, cur_len)])
-        cur_shard, cur_off, cur_len = shard, off, length
-    if cur_shard is not None:
-        groups.append([(cur_shard, cur_off, cur_len)])
-    return groups
+    def __init__(self, spans: Sequence[Span]):
+        self.spans = list(spans)
 
 
 class ZipNumReader(DataSourceReader):
@@ -201,58 +106,24 @@ class ZipNumReader(DataSourceReader):
             yield f  # Spark re-applies everything exactly
 
     def partitions(self) -> Sequence[InputPartition]:
-        groups = plan_blocks(
-            _load_summary(self.cluster_dir, self._filesystem()),
-            self.start,
-            self.end,
-            self.num_partitions,
+        spans = plan_blocks(
+            partial(iter_summary_rows, self.cluster_dir, self._filesystem()),
+            self.start, self.end, self.num_partitions,
         )
-        return [ZipNumBlocks(g) for g in groups] or [ZipNumBlocks([])]
+        return [ZipNumBlocks([s]) for s in spans] or [ZipNumBlocks([])]
 
     def read(self, partition: ZipNumBlocks):
         """Yield one Arrow RecordBatch per gzip member — the zero-copy fast
         path of the Python DataSource API (row tuples would round-trip every
-        line through the pickler). I/O goes through fsio, so the cluster dir
-        may be local, ``hdfs://`` or ``s3://`` (HDFSBlockLoader.java:19-42).
-
-        skip_bad salvage/skip events are logged per block (executor log) —
-        mirroring ``zipnum_range``'s reporting so tolerated data loss stays
-        visible on this path too."""
-        import logging
-
+        line through the pickler). Blocks are read by the codec's one read
+        loop (``read_block_lines``: ranged reads through fsio, per-member
+        salvage and skip_bad logging)."""
         import pyarrow as pa
 
-        from ia_hadoop_tools_spark.sources import fsio
-        from ia_hadoop_tools_spark.sources.zipnum import (
-            _gunzip_salvage,
-            block_lines,
-        )
-
-        log = logging.getLogger(__name__)
-        fs = self._filesystem()
-        for shard, off, length in partition.blocks:
-            path = fsio.join(self.cluster_dir, shard)
-            try:
-                payload = fsio.read_range(path, off, length, fs)
-            except OSError:
-                if not self.skip_bad:
-                    raise
-                log.warning("skip-bad: unreadable block %s@%s", shard, off)
-                continue
-            text, clean = _gunzip_salvage(payload)
-            if not clean:
-                if not self.skip_bad:
-                    raise IOError(
-                        f"corrupt gzip member in {shard} at offset {off}; "
-                        f"set option('skip_bad', 'true') to salvage"
-                    )
-                log.warning(
-                    "skip-bad: corrupt member %s@%s, salvaged %d lines",
-                    shard, off, text.count("\n"),
-                )
-            lines = block_lines(text)
-            if not lines:
-                continue
+        for lines in read_block_lines(
+            self.cluster_dir, partition.spans, None, None,
+            skip_bad=self.skip_bad, filesystem=self._filesystem(),
+        ):
             keys, tss = [], []
             for line in lines:
                 parts = line.split(" ", 2)

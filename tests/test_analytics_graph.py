@@ -88,7 +88,9 @@ def test_pagerank_cache_edges_auto_from_leaf_estimates(
     lazy = pagerank(edges, iterations=3)
     assert "InMemoryTableScan" not in plan_of(lazy)
 
-    monkeypatch.setenv("SPARK_GRAFT_PR_CACHE_LEAF_BYTES", "1")
+    from ia_hadoop_tools_spark.operators import graph
+
+    monkeypatch.setattr(graph, "PR_CACHE_LEAF_SPLITS", 0)
     cached = pagerank(edges, iterations=3)
     assert "InMemoryTableScan" in plan_of(cached)
     a = {r["node"]: r["rank"] for r in lazy.collect()}
@@ -100,6 +102,34 @@ def test_pagerank_cache_edges_auto_from_leaf_estimates(
     # unknown-size leaves (RDD-backed plans carry Long.Max estimates)
     # stay lazy even under a tiny budget
     assert "InMemoryTableScan" not in plan_of(pagerank(raw, iterations=2))
+
+
+def test_pagerank_cache_edges_auto_keeps_cached_input_lazy(
+    spark, tmp_path, monkeypatch
+):
+    """An already-cached edge input (an InMemoryRelation leaf, which
+    reports its source's size) is not persisted a second time, even when
+    its size is past the budget — but an uncached leaf beside it still
+    counts, so a cached frame joined with a large scan is persisted."""
+    from ia_hadoop_tools_spark.operators import graph
+
+    for name in ("edges", "more"):
+        spark.createDataFrame(
+            [(i, (i + 1) % 6) for i in range(6)], "src long, dst long"
+        ).write.parquet(str(tmp_path / name))
+    edges = spark.read.parquet(str(tmp_path / "edges")).cache()
+    mixed = edges.unionByName(spark.read.parquet(str(tmp_path / "more")))
+    monkeypatch.setattr(graph, "PR_CACHE_LEAF_SPLITS", 0)
+    try:
+        assert not graph._edges_exceed_lazy_budget(edges)
+        assert pagerank(edges, iterations=2).pr_caches == ()
+        assert graph._edges_exceed_lazy_budget(mixed)
+        caches = pagerank(mixed, iterations=2).pr_caches
+        assert caches
+        for c in caches:
+            c.unpersist()
+    finally:
+        edges.unpersist()
 
 
 def test_pagerank_deterministic_across_partitionings(spark):

@@ -5,6 +5,7 @@ read_http_paged client — two deployments of the engine feeding each other."""
 from __future__ import annotations
 
 import threading
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -300,3 +301,44 @@ def test_closest_malformed_capture_ranks_last_not_nearest(spark, tmp_path):
     # single-capture lookup never returns the malformed line
     got1 = pager.closest_lines(key, "20200112000000", limit=1).splitlines()
     assert [l.split(" ")[5] for l in got1] == ["DOK1"]
+
+
+def test_served_records_with_unicode_line_breaks_stay_whole(spark, tmp_path):
+    """Records are framed by \\n only: a \\x0c, \\x85 or U+2028 inside a
+    field must not split a served record (str.splitlines() would), on the
+    page path and the closest path alike."""
+    from ia_hadoop_tools_spark.sources.zipnum_datasource import register_zipnum
+
+    key = "com,odd)/p"
+    lines = sorted([
+        f"{key} 20200101000000 http://odd.com/p\x0cq text/html 200 D1 - - 10 0 f.warc.gz",
+        f"{key} 20200102000000 http://odd.com/p\u2028q text/html 200 D2 - - 10 7 f.warc.gz",
+        f"{key} 20200103000000 http://odd.com/p\x85q text/html 200 D3 - - 10 14 f.warc.gz",
+        "com,plain)/ 20200101000000 http://plain.com/ text/html 200 D4 - - 10 21 f.warc.gz",
+    ])
+    d = str(tmp_path / "odd_cluster")
+    df = spark.createDataFrame([(l,) for l in lines], "value: string")
+    write_zipnum(df, d, lines_per_block=10, num_shards=1)
+    direct = sorted(r.value for r in zipnum_range(spark, d, None, None).collect())
+    register_zipnum(spark)
+    ds = sorted(r.value for r in spark.read.format("zipnum").load(d).collect())
+    assert direct == ds == lines
+
+    srv = make_cdx_server(d, port=0, page_size=10)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}/cdx"
+        code, _, body = _get(f"{base}?page=0")
+        assert code == 200
+        assert sorted(l for l in body.split("\n") if l) == lines
+        code, _, body = _get(
+            f"{base}?key={urllib.parse.quote(key)}&closest=20200102000000&limit=3"
+        )
+        assert code == 200
+        got = [l for l in body.split("\n") if l]
+        assert got[0] == lines[1]  # D2, the exact-second capture
+        assert sorted(got) == [l for l in lines if l.startswith(key + " ")]
+    finally:
+        srv.shutdown()
+        srv.server_close()

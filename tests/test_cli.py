@@ -81,6 +81,32 @@ def test_hdfs_utils(tmp_path, capsys, monkeypatch):
     assert "copied" in log and (tmp_path / "c.bin").exists()
 
 
+def test_range_dumper_keeps_members_after_a_corrupt_one(
+    tmp_path, capsys, monkeypatch
+):
+    """range-dumper walks a range member by member: a corrupt member in
+    the middle costs only its own lines, and a range cutting the last
+    member short still dumps that member's complete lines."""
+    blocks = [[f"k{b}{i} 20200101000000 v" for i in range(20)] for b in "abc"]
+    members = [
+        gzip.compress("".join(l + "\n" for l in b).encode(), mtime=0)
+        for b in blocks
+    ]
+    bad = bytearray(members[1])
+    bad[len(bad) // 2 : len(bad) // 2 + 4] = b"\xff\x00\xff\x00"
+    shard = tmp_path / "part-00000.gz"
+    shard.write_bytes(members[0] + bytes(bad) + members[2])
+    cut = len(members[0]) + len(bad) + len(members[2]) // 2
+    monkeypatch.setattr(
+        sys, "stdin", io.StringIO(f"{shard}\n{shard}\t0\t{cut}\n")
+    )
+    out = _run(capsys, "range-dumper").splitlines()
+    whole = blocks[0] + blocks[2]
+    assert out[: len(whole)] == whole
+    tail = out[len(whole) :]
+    assert tail == blocks[0] + blocks[2][: len(tail) - len(blocks[0])]
+
+
 def test_file_search_binary_search(tmp_path, capsys):
     p = tmp_path / "sorted.txt"
     p.write_text("".join(f"k{i:05d} value{i}\n" for i in range(0, 20000, 3)))

@@ -53,6 +53,25 @@ def test_zipnum_range_prunes_blocks(spark, tmp_path):
     assert [g.split()[0] for g in got] == [e.split()[0] for e in expect]
 
 
+def test_zipnum_range_runs_one_job_one_stage(spark, tmp_path):
+    """Blocks are planned on the driver from ALL.summary, so the scan is one
+    job of one stage (no summary DataFrame, window or shuffle)."""
+    out = str(tmp_path / "cluster")
+    df = spark.createDataFrame([(l,) for l in _lines(120)], "value: string")
+    write_zipnum(df, out, lines_per_block=20, num_shards=2)
+    sc = spark.sparkContext
+    group = "zipnum-range-job-probe"
+    sc.setJobGroup(group, "exactly one job may appear here")
+    try:
+        got = zipnum_range(spark, out, "k0030", "k0070").collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group) or [])
+    finally:
+        sc.setJobGroup("", "")
+    assert sorted(r.value for r in got) == _lines(120)[30:70]
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+
+
 def test_summary_generator_rebuilds_all_summary(spark, tmp_path):
     from ia_hadoop_tools_spark.sources.zipnum import (
         manifest_aggregator,
@@ -264,3 +283,132 @@ def test_zipnum_rerun_with_fewer_shards_drops_stale_sidecars(spark, tmp_path):
         "part-00000.gz", "part-00000.summary",
         "part-00001.gz", "part-00001.summary",
     }
+
+
+def _hand_shard(tmp_path, n_blocks=4, lines_per_block=25):
+    """One shard of n_blocks gzip members, written without Spark; returns
+    (shard path, per-block lines, per-block member bytes)."""
+    data = _lines(n_blocks * lines_per_block)
+    blocks = [
+        data[i : i + lines_per_block]
+        for i in range(0, len(data), lines_per_block)
+    ]
+    members = [
+        gzip.compress("".join(l + "\n" for l in b).encode(), mtime=0)
+        for b in blocks
+    ]
+    path = tmp_path / "part-00000.gz"
+    path.write_bytes(b"".join(members))
+    return str(path), blocks, members
+
+
+def test_span_is_streamed_in_bounded_reads(tmp_path, monkeypatch):
+    """A span of many blocks is read from ONE open shard in reads no larger
+    than READ_CHUNK_BYTES (here below one block), never as one span-sized
+    buffer; members straddling reads come back whole."""
+    from pyarrow import fs as pafs
+
+    from ia_hadoop_tools_spark.sources import zipnum
+    from ia_hadoop_tools_spark.sources.zipnum import read_block_lines
+
+    path, blocks, members = _hand_shard(tmp_path)
+    chunk = min(map(len, members)) // 3
+    monkeypatch.setattr(zipnum, "READ_CHUNK_BYTES", chunk)
+    opens, reads = [], []
+
+    class RecordingFS:
+        def open_input_file(self, p):
+            opens.append(p)
+            fh = pafs.LocalFileSystem().open_input_file(p)
+            real_read = fh.read
+
+            class Handle:
+                def __enter__(self):
+                    return self
+
+                def __exit__(self, *exc):
+                    fh.close()
+
+                def seek(self, off):
+                    fh.seek(off)
+
+                def read(self, n):
+                    reads.append(n)
+                    return real_read(n)
+
+            return Handle()
+
+    span = ("part-00000.gz", 0, sum(map(len, members)))
+    got = list(
+        read_block_lines(str(tmp_path), [span], None, None,
+                         filesystem=RecordingFS())
+    )
+    assert got == blocks
+    assert len(opens) == 1
+    assert max(reads) <= chunk and sum(reads) == span[2]
+
+
+def test_member_walk_resyncs_after_a_corrupt_member():
+    """gzip_members: a corrupt member is reported once with no text, the
+    walk resumes at the next member header (here split across reads), and
+    a stream cut mid-member keeps that member's complete lines."""
+    from ia_hadoop_tools_spark.sources.zipnum import gzip_members
+
+    blocks = [_lines(100)[i : i + 25] for i in range(0, 100, 25)]
+    members = [
+        gzip.compress("".join(l + "\n" for l in b).encode(), mtime=0)
+        for b in blocks
+    ]
+    bad = bytearray(members[1])
+    bad[len(bad) // 2 : len(bad) // 2 + 4] = b"\xff\x00\xff\x00"
+    stream = members[0] + bytes(bad) + members[2] + members[3]
+    cut = len(members[0]) + len(bad) + 1  # split the next header
+    walked = list(gzip_members([stream[:cut], stream[cut:]]))
+    assert [(off, clean) for off, _t, clean in walked] == [
+        (0, True),
+        (len(members[0]), False),
+        (len(members[0]) + len(bad), True),
+        (len(members[0]) + len(bad) + len(members[2]), True),
+    ]
+    assert walked[1][1] == ""
+    assert [t for _o, t, _c in walked[2:]] == [
+        "".join(l + "\n" for l in b) for b in blocks[2:]
+    ]
+
+    head = members[0] + members[1][: len(members[1]) // 2]
+    *whole, (_off, partial, clean) = gzip_members([head])
+    assert [c for _o, _t, c in whole] == [True]
+    assert not clean and partial.endswith("\n")
+    assert partial.splitlines() == blocks[1][: partial.count("\n")]
+
+
+def test_short_shard_counts_one_bad_block(tmp_path):
+    """A shard shorter than its summary says is reported once, whether it
+    ends at a member boundary (a missing block) or inside a member (a cut
+    one, whose complete lines are kept)."""
+    import pytest
+
+    from ia_hadoop_tools_spark.sources.zipnum import read_block_lines
+
+    class Acc:
+        value = 0
+
+        def add(self, n):
+            self.value += n
+
+    path, blocks, members = _hand_shard(tmp_path)
+    span = ("part-00000.gz", 0, sum(map(len, members)))
+    three = sum(map(len, members[:3]))
+    for cut, lo, hi in [
+        (three, 75, 75),
+        (three + len(members[3]) // 2, 75, 99),
+    ]:
+        os.truncate(path, cut)
+        with pytest.raises(OSError):
+            list(read_block_lines(str(tmp_path), [span], None, None))
+        acc = Acc()
+        got = read_block_lines(
+            str(tmp_path), [span], None, None, skip_bad=True, bad_acc=acc
+        )
+        assert lo <= sum(map(len, got)) <= hi
+        assert acc.value == 1

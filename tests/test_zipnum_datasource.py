@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import functions as F
 
-from ia_hadoop_tools_spark.sources.zipnum import write_zipnum, zipnum_range
-from ia_hadoop_tools_spark.sources.zipnum_datasource import (
+from ia_hadoop_tools_spark.sources.zipnum import (
     plan_blocks,
+    write_zipnum,
+    zipnum_range,
+)
+from ia_hadoop_tools_spark.sources.zipnum_datasource import (
+    ZipNumReader,
     register_zipnum,
 )
 
@@ -54,43 +59,51 @@ def test_plan_blocks_prunes_by_summary():
     summary = [
         (f"k{i:04d}", "part-00000.gz", i * 100, 100) for i in range(0, 100, 10)
     ]
-    all_groups = plan_blocks(summary, None, None, 4)
-    assert sum(len(g) for g in all_groups) == 10
+    all_spans = plan_blocks(summary, None, None, 4)
+    assert sum(length for _, _, length in all_spans) == 10 * 100
     pruned = plan_blocks(summary, "k0035", "k0055", 4)
-    kept = [b for g in pruned for b in g]
     # covering blocks only: k0030 (covers 30-39), k0040, k0050
-    assert [b[1] // 1000 for b in kept] == [3, 4, 5]
+    assert [off // 1000 for _, off, _ in pruned] == [3, 4, 5]
 
 
-def test_plan_blocks_rejects_malformed_summaries():
+def test_plan_blocks_rejects_malformed_summaries(spark, tmp_path):
     """Advisor round-5: an out-of-order external summary used to be
     silently mis-pruned (row loss the row-level re-filter cannot repair);
-    it must fail loudly instead."""
+    it must fail loudly instead — in plan_blocks and in zipnum_range,
+    which plans through it."""
     import pytest
 
+    def rejects(rows, match):
+        with pytest.raises(ValueError, match=match):
+            plan_blocks(rows, None, None, 2)
+        d = tmp_path / f"bad-{match.replace(' ', '-')}"
+        d.mkdir()
+        (d / "ALL.summary").write_text(
+            "".join(f"{k}\t{s}\t{o}\t{n}\n" for k, s, o, n in rows)
+        )
+        with pytest.raises(ValueError, match=match):
+            zipnum_range(spark, str(d), None, None)
+
     ok = [(f"k{i:04d}", "s0.gz", i * 100, 100) for i in range(0, 40, 10)]
-    assert sum(len(g) for g in plan_blocks(ok, None, None, 2)) >= 1
+    assert plan_blocks(ok, None, None, 2)
 
     offset_regress = list(ok)
     offset_regress[2] = ("k0020", "s0.gz", 50, 100)
-    with pytest.raises(ValueError, match="offset regressed"):
-        plan_blocks(offset_regress, None, None, 2)
+    rejects(offset_regress, "offset regressed")
 
     key_regress = list(ok)
     key_regress[2] = ("k0005", "s0.gz", 2000, 100)
-    with pytest.raises(ValueError, match="key regressed"):
-        plan_blocks(key_regress, None, None, 2)
+    rejects(key_regress, "key regressed")
 
     interleaved = [
         ("k0000", "s0.gz", 0, 100),
         ("k0010", "s1.gz", 0, 100),
         ("k0020", "s0.gz", 100, 100),
     ]
-    with pytest.raises(ValueError, match="reappears"):
-        plan_blocks(interleaved, None, None, 2)
+    rejects(interleaved, "reappears")
 
 
-def test_datasource_skip_bad_option(spark, tmp_path):
+def test_datasource_skip_bad_option(spark, tmp_path, monkeypatch, caplog):
     out = _cluster(spark, tmp_path, n=100, lpb=25, shards=1)
     register_zipnum(spark)
     # corrupt the second member
@@ -112,6 +125,29 @@ def test_datasource_skip_bad_option(spark, tmp_path):
         spark.read.format("zipnum").option("skip_bad", "true").load(out)
     )
     assert 50 <= tolerant.count() < 100
+
+    # every block in ONE span: the span is walked member by member, so the
+    # corrupt block 2 of 4 costs only its own 25 lines and counts once
+    one_span = (
+        spark.read.format("zipnum").option("skip_bad", "true")
+        .option("num_partitions", "1").load(out)
+    )
+    assert one_span.count() == 75
+    reader = ZipNumReader(
+        {"path": out, "skip_bad": "true", "num_partitions": "1"}
+    )
+    (part,) = reader.partitions()
+    assert part.spans == [("part-00000.gz", 0, os.path.getsize(shard))]
+    with caplog.at_level(logging.WARNING):
+        assert sum(b.num_rows for b in reader.read(part)) == 75
+    assert sum("corrupt gzip member" in r.message for r in caplog.records) == 1
+
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1)
+    )
+    direct = zipnum_range(spark, out, None, None, skip_bad=True)
+    assert len(direct.collect()) == 75
+    assert direct.skip_bad_count.value == 1
 
 
 def test_datasource_le_and_eq_filters_on_block_boundary(spark, tmp_path):
