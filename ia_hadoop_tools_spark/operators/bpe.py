@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ia_hadoop_tools_spark.plans.stats import log_decision
+
 #: split pattern for the corpus -> word pass. Pinned to the explicit
 #: ASCII class because \\s differs across engines (Java includes \\x0B,
 #: RE2/DuckDB does not, Python's str.split() adds Unicode spaces); the
@@ -330,21 +332,24 @@ def _initial_symbol_vocab(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-#: vocab row count at or below which the merge loop runs SINGLE-PARTITION
-#: (round 12, VERDICT r11 #5): a 1-partition child satisfies the stats
-#: groupBy's ClusteredDistribution outright, so every per-merge argmax job
-#: is ONE stage with ZERO exchanges instead of a 2-stage AQE round trip —
-#: the measured per-step floor of the sequential trainer.  Above the
-#: threshold (large word vocabularies at corpus scale) the vocab keeps its
-#: source partitioning.  ``$SPARK_GRAFT_BPE_ONE_PART_VOCAB`` overrides.
+#: vocab row count at or below which the merge loop runs SINGLE-PARTITION:
+#: a 1-partition child satisfies the stats groupBy's ClusteredDistribution
+#: outright, so every per-merge argmax job is ONE stage with ZERO exchanges
+#: instead of a 2-stage AQE round trip — the measured per-step floor of the
+#: sequential trainer.  Above it (large word vocabularies at corpus scale)
+#: the vocab keeps its source partitioning.
 BPE_ONE_PARTITION_VOCAB_ROWS = 65536
 
 
-def _one_partition_vocab_budget() -> int:
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_BPE_ONE_PART_VOCAB")
-    return int(raw) if raw else BPE_ONE_PARTITION_VOCAB_ROWS
+def _one_partition(vocab_rows: int | None) -> bool:
+    """Whether the merge loop runs over a single-partition vocab; logs
+    the decision (``plans/stats.py``)."""
+    one = vocab_rows is not None and vocab_rows <= BPE_ONE_PARTITION_VOCAB_ROWS
+    log_decision(
+        "bpe_one_partition", "one_partition" if one else "source_partitioning",
+        vocab_rows=vocab_rows, threshold=BPE_ONE_PARTITION_VOCAB_ROWS,
+    )
+    return one
 
 
 def bpe_train(
@@ -365,7 +370,7 @@ def bpe_train(
     eager localCheckpoint whose predecessor's blocks are explicitly
     released — bounded executor storage at any merge count.
 
-    ``symbol_vocab`` (round-11 optimization) lets a caller training
+    ``symbol_vocab`` lets a caller training
     several tokenizers over the SAME corpus (e.g. the strict-batch
     equivalence contract, which runs this trainer AND the batched one)
     share one persisted ``_initial_symbol_vocab`` frame — the corpus
@@ -373,21 +378,18 @@ def bpe_train(
     NEVER unpersisted here (the caller owns its lifecycle); results are
     identical since the frame is exactly what would be recomputed.
 
-    ``vocab_rows`` (round 12): the vocabulary's known row count, when the
-    caller has already materialized/counted it.  At or below
-    ``BPE_ONE_PARTITION_VOCAB_ROWS`` the merge loop runs over a
-    single-partition vocab, which removes the exchange (and the second
-    AQE stage) from every per-merge stats/argmax job — the driver-loop
-    latency that dominates this trainer at any corpus size, since every
-    per-merge job touches only the vocab.  Merge results are unaffected
-    by partitioning (integer count sums; deterministic tie-break).
+    ``vocab_rows``: the vocabulary's known row count, when the caller
+    has already counted it.  At or below ``BPE_ONE_PARTITION_VOCAB_ROWS``
+    the merge loop runs over a single-partition vocab (no exchange in any
+    per-merge job).  Merge results are unaffected by partitioning
+    (integer count sums; deterministic tie-break).
     """
     owns_vocab = symbol_vocab is None
     base_vocab = (
         _initial_symbol_vocab(df, text_col) if owns_vocab else symbol_vocab
     )
     vocab = base_vocab
-    if vocab_rows is not None and vocab_rows <= _one_partition_vocab_budget():
+    if _one_partition(vocab_rows):
         vocab = vocab.coalesce(1)
     initial = vocab
 
@@ -399,24 +401,20 @@ def bpe_train(
     prev = vocab
     prev_is_checkpoint = False
     last_checkpoint: DataFrame | None = None
-    # ROUND-11 OPTIMIZATION (guide §1.2: remove whole jobs before tuning
-    # per-task work): the old loop ran vocab.count() after every persist
-    # to materialize the child BEFORE unpersisting its parent — one extra
-    # vocab-sized job per merge, doubling the job count of the sequential
-    # path.  Instead persist LAZILY and defer the parent's unpersist until
-    # the NEXT iteration's stats job has materialized the child (the
-    # stats job computes through the child's persist, caching it as a
-    # side effect).  Same safety property — no step ever recomputes from
-    # the corpus — at one vocab job per merge instead of two.
+    # persist LAZILY and defer the parent's unpersist until the NEXT
+    # iteration's stats job has materialized the child (the stats job
+    # computes through the child's persist, caching it as a side effect):
+    # no step ever recomputes from the corpus, at one vocab job per merge
+    # instead of two (a count() after every persist doubled the jobs).
     pending_unpersist: DataFrame | None = None
     for step_i in range(num_merges):
-        # ROUND-12: argmax over (n desc, a asc, b asc) as ONE single-row
+        # argmax over (n desc, a asc, b asc) as ONE single-row
         # aggregate — min of struct(-n, a, b) is the same total order
         # (struct comparison is field-lexicographic; -n asc == n desc,
         # string fields compare in UTF-8 byte order == codepoint order).
-        # The previous orderBy().limit(1) compiled to TakeOrderedAndProject,
+        # orderBy().limit(1) would compile to TakeOrderedAndProject,
         # which under AQE costs an extra materialization round per job —
-        # measured 385 -> 224 ms/step on the cached one-partition vocab
+        # measured 385 vs 224 ms/step on the cached one-partition vocab
         # (the per-step floor of this driver-loop trainer).
         top = (
             _pair_stats(vocab)
@@ -653,13 +651,7 @@ def bpe_train_batched(
         _initial_symbol_vocab(df, text_col) if owns_vocab else symbol_vocab
     )
     vocab = base_vocab
-    # single-partition merge loop for small vocabularies — every
-    # per-round stats/top-K job becomes one exchange-free stage (see
-    # bpe_train's ``vocab_rows``); results are partitioning-independent
-    one_part = (
-        vocab_rows is not None
-        and vocab_rows <= _one_partition_vocab_budget()
-    )
+    one_part = _one_partition(vocab_rows)  # see bpe_train's ``vocab_rows``
     if one_part:
         vocab = vocab.coalesce(1)
     initial = vocab
@@ -678,7 +670,7 @@ def bpe_train_batched(
     # released AFTER that job instead of paying a count() job per round
     pending_unpersist: DataFrame | None = None
     while len(merges) < num_merges:
-        # ROUND-12: on the one-partition (small-vocab-hint) path the
+        # on the one-partition (small-vocab-hint) path the
         # stats table is vocab-bounded and tiny — collect it ONCE per
         # round and derive both the ordered top list (driver sort; the
         # (-n, a, b) tuple key is the exact (n desc, a asc, b asc)

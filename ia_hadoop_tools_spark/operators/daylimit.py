@@ -11,8 +11,12 @@ canonical order to be (timestamp, *tiebreakers): deterministic, oracle-friendly
 (SURVEY.md §7.4 hard part #3).
 
 Spark: a ranking window — ``row_number() OVER (PARTITION BY key, day ORDER BY
-ts, ...) <= n``. One shuffle on (key, day); skewed hot urls are split by AQE
-skew handling in the sort-based window path.
+ts, ...) <= n``. One shuffle on (key, day). Catalyst plans the rank filter
+as a partial ``WindowGroupLimit`` before the exchange, so each map task ships
+at most n rows per (key, day): a hot url moves n x map tasks rows, not all
+its captures. AQE does not split that shuffle (skew splitting applies to
+joins and rebalance, not window inputs; the executed plan reads it
+``coalesced``), so that partial limit is what bounds it.
 """
 
 from __future__ import annotations

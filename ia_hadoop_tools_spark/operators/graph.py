@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ia_hadoop_tools_spark.operators.components import release_local_checkpoint
+from ia_hadoop_tools_spark.plans.stats import log_decision, plan_stats
 
 #: fixed-point scale: rank 1.0 == 1_000_000_000
 PR_SCALE = 1_000_000_000
@@ -41,6 +42,8 @@ _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 # pagerank(cache_edges=None) leaf budget in maxPartitionBytes splits
 PR_CACHE_LEAF_SPLITS = 8  # measurements: _edges_exceed_lazy_budget
+# a leaf without statistics reports Long.MaxValue
+_UNKNOWN_SIZE = 1 << 62
 
 
 def _node_col(df: DataFrame, name: str):
@@ -85,45 +88,35 @@ def symmetric_edges(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 
 def _edges_exceed_lazy_budget(edges: DataFrame) -> bool:
-    """True when the edge plan's summed LEAF size estimates say the lazy
-    shape's ~2x-per-superstep subtree re-execution would dominate —
-    decided with zero jobs from optimizer stats (the round-11
-    ensure_min_partitions / bloom._needs_mask_reduce technique; an
-    ``.rdd`` probe would execute upstream AQE stages at plan-build time).
+    """True (cache the edges) when the edge plan's leaves sum above
+    ``PR_CACHE_LEAF_SPLITS`` (8) x maxPartitionBytes, 1 GiB at the
+    default 128 MB split. An ``InMemoryRelation`` leaf counts 0 (a
+    re-scan reads the cache); an unknown-size leaf (RDD-backed, Long.Max)
+    keeps the lazy shape. Unreadable statistics cache: the cached shape
+    completed at every measured scale. Mechanism and decision record:
+    ``plans/stats.py``.
 
-    Threshold: ``PR_CACHE_LEAF_SPLITS`` (8) x maxPartitionBytes (1 GiB
-    at the default 128 MB split).  Measured bounds for the crossover (scripts/probe_pagerank_cache_r12.py, the
-    registry part<->supplier graph, 5 supersteps, 8 GB heap): 21 MB
-    leaves (sf0.1) lazy wins x1.2-1.65 (round-11 A/B); 213 MB (sf1)
-    parity (lazy 20.4 s / cached 19.7 s med); 2.1 GB (sf10) the lazy
-    shape FAILS with SparkOutOfMemoryError — its ~2x-per-superstep
-    subtrees execute concurrently within one action and exhaust
-    execution memory — while the cached shape completes in ~95 s.  Any
-    budget inside (256 MB, 2 GB) satisfies the measurements; 1 GiB is
-    the midpoint and scales with the configured split size.  A cached
-    leaf (``InMemoryRelation``) adds nothing: a re-scan reads the cache.
-    Unknown-size leaves (RDD-backed: Long.Max estimates) and probe
-    failures stay LAZY, the measured-faster local shape."""
-    try:
-        from ia_hadoop_tools_spark.operators.textops import (
-            _max_partition_bytes,
-        )
-
-        budget = PR_CACHE_LEAF_SPLITS * _max_partition_bytes(edges)
-        unknown = 1 << 62  # Long.Max-ish sentinel for statless leaves
-        leaves = edges._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.nodeName() == "InMemoryRelation":
-                continue  # already cached: a re-scan reads the cache
-            n = int(str(leaf.stats().sizeInBytes()))
-            if n >= unknown:
-                return False
-            total += n
-        return total > budget
-    except Exception:
-        return False
+    Crossover measured with scripts/probe_pagerank_cache_r12.py (the
+    registry part<->supplier graph, 5 supersteps, 8 GB heap): 21 MB of
+    leaves (sf0.1) lazy wins x1.2-1.65; 213 MB (sf1) parity (lazy 20.4 s,
+    cached 19.7 s median); 2.1 GB (sf10) the lazy shape fails with
+    SparkOutOfMemoryError (its ~2x-per-superstep subtrees run
+    concurrently within one action and exhaust execution memory) while
+    the cached shape completes in ~95 s. Any budget inside (256 MB, 2 GB)
+    fits; 1 GiB is the midpoint and scales with the split size."""
+    stats = plan_stats(edges)
+    total = threshold = None
+    cache = True
+    if stats is not None:
+        sizes = [n for name, n in stats.leaves if name != "InMemoryRelation"]
+        total = sum(sizes)
+        threshold = PR_CACHE_LEAF_SPLITS * stats.max_partition_bytes
+        cache = total > threshold and max(sizes, default=0) < _UNKNOWN_SIZE
+    log_decision(
+        "pagerank_cache_edges", "cache" if cache else "lazy",
+        leaf_bytes=total, threshold=threshold,
+    )
+    return cache
 
 
 def pagerank(
@@ -166,24 +159,16 @@ def pagerank(
     nodes their teleport floor, so when none exist it is one shuffle per
     superstep of pure overhead.
 
-    ``cache_edges`` default (round 12 — auto-decided, VERDICT r11 #4):
-    ``True`` when checkpoints/convergence split the run into multiple
-    actions (``materialize_every``/``epsilon``), where exchange reuse
-    stops and the cache pays for itself, OR when the edge plan's LEAF
-    size estimates exceed a budget (``PR_CACHE_LEAF_SPLITS`` = 8 x
-    maxPartitionBytes, ~1 GiB at the default split) — at that
-    size the lazy shape's ~2x-per-superstep re-execution of the edge
-    pipeline re-pays the dominant scan+shuffle every iteration, and
-    measured at sf10 it exhausts execution memory outright (see
-    ``_edges_exceed_lazy_budget`` for the probe numbers).  Small graphs keep the LAZY shape: within a single
-    action the duplicated subtrees are cheap codegen pipelines running
-    concurrently, and persisting measured ~20% SLOWER at bench SFs (the
-    InMemoryRelation materialization serializes the run — round-11 A/B).
-    Cached leaves add nothing to the budget and unknown-size (RDD-backed:
-    Long.Max) leaves keep the lazy shape: a re-scan of such an input
-    reads a cache, not storage.  The decision costs zero jobs
-    (optimizer leaf stats only) and is visible in the plan
-    (InMemoryRelation appears only above the threshold).
+    ``cache_edges=None`` (default) caches when checkpoints or
+    convergence checks split the run into several actions
+    (``materialize_every``/``epsilon``), where exchange reuse stops, or
+    when ``_edges_exceed_lazy_budget`` says the edge plan's leaves exceed
+    ``PR_CACHE_LEAF_SPLITS`` x maxPartitionBytes: past that size the lazy
+    shape re-pays the edge scan and shuffle about twice per superstep, and
+    at sf10 it ran out of execution memory. Small graphs stay lazy: the
+    duplicated subtrees are cheap concurrent codegen pipelines, and
+    persisting measured ~20% slower at bench scale factors. The decision
+    costs zero jobs and shows in the plan (an ``InMemoryRelation``).
 
     ``epsilon`` (scaled-integer units, e.g. ``scale // 10**6`` for 1e-3
     rank units) switches to CONVERGENCE MODE: ``iterations`` becomes the

@@ -114,13 +114,9 @@ def train_char_lm(
     yields an empty model, which :func:`lm_score` rejects (an empty model
     would score every doc 0.0, the best possible score).
     """
-    # ROUND 12: the round-11-era ensure_min_partitions spread was
-    # MEASURED SLOWER on every lm-family registry row and removed
-    # (interleaved A/B at sf0.1: lm_score x0.61, lm_buckets x0.55,
-    # lm_word_score x0.88 flat; word/backoff/lang rows parity) — the
-    # gram enumerators are whole-stage codegen since round 11, so the
-    # round-robin exchange of the text re-shuffled every row to
-    # parallelize work the scan pipeline already does cheaply.
+    # no ensure_min_partitions spread: the gram enumerators are codegen,
+    # and re-shuffling every text row measured slower on every lm row
+    # (sf0.1 A/B: lm_score x0.61, lm_buckets x0.55, lm_word_score x0.88)
     t = F.lower(F.col(text_col))
     # split('', '(?!$)') returns [''] — filter it so an empty doc in the
     # reference cannot inflate V by a phantom character (the SQL oracle
@@ -222,13 +218,7 @@ def train_word_lm(
     LAZY like the char trainer: constructing the model launches no job;
     the vocab limit and V ride inside the plan as broadcast aggregates.
     """
-    # ROUND 12: the round-11-era ensure_min_partitions spread was
-    # MEASURED SLOWER on every lm-family registry row and removed
-    # (interleaved A/B at sf0.1: lm_score x0.61, lm_buckets x0.55,
-    # lm_word_score x0.88 flat; word/backoff/lang rows parity) — the
-    # gram enumerators are whole-stage codegen since round 11, so the
-    # round-robin exchange of the text re-shuffled every row to
-    # parallelize work the scan pipeline already does cheaply.
+    # no ensure_min_partitions spread: measured slower (see train_char_lm)
     bigrams = _word_bigrams(reference, [], text_col)
     vocab = _top_vocab(reference, text_col, vocab_size).select("__w")
     vdf = vocab.agg(F.count("*").alias("__v"))
@@ -319,13 +309,7 @@ def train_word_backoff_lm(
     not baked into the table, so one trained model serves any alpha.
     LAZY: no job at construction (vocab limit + total ride the plan).
     """
-    # ROUND 12: the round-11-era ensure_min_partitions spread was
-    # MEASURED SLOWER on every lm-family registry row and removed
-    # (interleaved A/B at sf0.1: lm_score x0.61, lm_buckets x0.55,
-    # lm_word_score x0.88 flat; word/backoff/lang rows parity) — the
-    # gram enumerators are whole-stage codegen since round 11, so the
-    # round-robin exchange of the text re-shuffled every row to
-    # parallelize work the scan pipeline already does cheaply.
+    # no ensure_min_partitions spread: measured slower (see train_char_lm)
     vocab = _top_vocab(reference, text_col, vocab_size)
     v = F.broadcast(vocab.select("__w"))
     # vocab already carries each kept token's corpus count — re-exploding

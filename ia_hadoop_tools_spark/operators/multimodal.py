@@ -287,13 +287,10 @@ def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
     partitioning, and a small input in one parquet row group would decode
     on ONE core (measured exactly that at sf0.1). ``ensure_min_partitions``
     spreads the batches across the executor slots; at 100 TB the input
-    already has thousands of partitions and it's a no-op.  ROUND 12: the
-    spread is now gated on ``decoder='real'`` — for the cheap fake
-    decoder the round-robin exchange of every PAYLOAD byte (plus the
-    sort-before-repartition pass) costs more than the md5 work it
-    parallelizes (multimodal_decode x0.69/x0.75 flat, two interleaved
-    A/Bs at sf0.1) — the guide-§2.3 rule: don't shuffle heavy opaque
-    payloads to parallelize cheap work.
+    already has thousands of partitions and it's a no-op.  Only
+    ``decoder='real'`` spreads: for the fake decoder, shuffling every
+    payload byte costs more than the md5 work it parallelizes
+    (multimodal_decode x0.69/x0.75 at sf0.1).
     """
     from ia_hadoop_tools_spark.operators.textops import ensure_min_partitions
 
@@ -393,8 +390,7 @@ def frame_sample(df: DataFrame, every_n: int = 10, decoder: str = "fake") -> Dat
                 {"asset_id": ids, "frame_index": idxs, "frame_digest": digests}
             )
 
-    # same CPU-bound spread as decode_features (project first; round 12:
-    # real-decoder only — see decode_features)
+    # same real-decoder-only spread as decode_features (project first)
     src = df.filter("media_type = 'video'").select("asset_id", "payload")
     if decoder == "real":
         src = ensure_min_partitions(src)
@@ -481,7 +477,7 @@ def resize_images(df: DataFrame, width: int, height: int, decoder: str = "fake")
                 out["height"] = height
             yield out
 
-    # round 12: real-decoder-only spread — see decode_features
+    # real-decoder-only spread — see decode_features
     src = df.filter("media_type = 'image'").select(
         "asset_id", "media_type", "payload", "width", "height"
     )

@@ -50,14 +50,9 @@ def repetition_stats(
     (both aggregations combine map-side; only skinny rows shuffle), same
     for 2-grams; join the two skinny stat tables back to the ids.
     """
-    # ROUND 12: the round-11 ensure_min_partitions spread was MEASURED
-    # SLOWER here and removed (interleaved A/B at sf0.1: quality_rules
-    # x0.89/x0.95 flat across two runs, and the r10-vs-r11 worktree A/B
-    # attributed the row's regression to exactly this call) — the
-    # round-robin exchange re-shuffles every text row (plus the
-    # sort-before-repartition pass) to parallelize tokenization that
-    # whole-stage codegen already does cheaply, and the gram groupBys
-    # shuffle right after anyway.
+    # no ensure_min_partitions spread: re-shuffling every text row to
+    # parallelize codegen tokenization measured slower (quality_rules
+    # x0.89/x0.95 at sf0.1), and the gram groupBys shuffle right after.
     src = df.select(F.col(id_col), F.col(text_col))
     words = (
         src.select(F.col(id_col), F.explode(_words(text_col)).alias("__w"))

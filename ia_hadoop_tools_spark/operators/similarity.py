@@ -197,18 +197,14 @@ def ann_lsh_topk(
     the cosine runs once per DISTINCT candidate after vectors join back.
     """
     from ia_hadoop_tools_spark.functions.vectorfns import dot_product, l2_norm
-    from ia_hadoop_tools_spark.operators.textops import ensure_min_partitions
 
     band_keys = _band_keys(F.col(vec_col), num_planes, bands, dim, seed)
     qb = queries.select(
         F.col(id_col).alias(query_id_col), F.explode(band_keys).alias("bucket")
     )
-    # ROUND 12: the round-11 corpus-side spread measured SLOWER here
-    # (ann_lsh x0.88/x0.93 flat, two interleaved A/Bs) — the band hash is
-    # one Arrow pass and the candidate join shuffles skinny rows anyway;
-    # the round-robin exchange of the vectors cost more than the extra
-    # parallelism bought. ann_bruteforce_topk KEEPS its spread (x1.2-1.4:
-    # its per-pair HOF cosine loop is the heavy case the spread exists for).
+    # no corpus-side spread: the band hash is one Arrow pass and the
+    # candidate join shuffles skinny rows anyway (spread measured ann_lsh
+    # x0.88/x0.93). ann_bruteforce_topk keeps its spread (x1.2-1.4).
     csrc = corpus.select(id_col, vec_col)
     cb = csrc.select(
         F.col(id_col).alias("neighbor_id"), F.explode(band_keys).alias("bucket")
@@ -661,11 +657,9 @@ def embedding_neardup_pairs(
     # candidates-then-verify shape as minhash_lsh_pairs).
     from ia_hadoop_tools_spark.operators.textops import _drop_hot_buckets
 
-    # ROUND 12: the round-11 spread was MEASURED SLOWER here and removed
-    # (embedding_neardup_lsh x0.78/x0.92, embedding_neardup_capped
-    # x0.79/x0.92 flat, two interleaved A/Bs): the band hash is ONE Arrow
-    # pass and every downstream step shuffles skinny (id, bucket) rows,
-    # so the round-robin exchange of the vectors bought nothing
+    # no spread: the band hash is ONE Arrow pass and every later step
+    # shuffles skinny (id, bucket) rows (spread measured
+    # embedding_neardup_lsh x0.78/x0.92, embedding_neardup_capped x0.79/x0.92)
     src = df.select(id_col, vec_col)
     banded = _drop_hot_buckets(
         src.select(
@@ -971,12 +965,9 @@ def assign_clusters(
             .filter(F.col("__member"))
             .drop("__member")
         )
-    # ROUND 12: the round-11 spread was MEASURED SLOWER on this path and
-    # removed (prototype_prune x0.85/x0.96 flat, two interleaved A/Bs;
-    # semdedup parity) — the argmax groupBy shuffles right after, so the
-    # extra round-robin exchange of the vectors bought nothing.  The
-    # projection path above KEEPS its spread (its single Arrow pass is
-    # the whole computation; unmeasured at bench SFs, not benched).
+    # no spread: the argmax groupBy shuffles right after (spread measured
+    # prototype_prune x0.85/x0.96). The projection path above keeps its
+    # spread: its single Arrow pass is the whole computation.
     e = df.select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__en")
     )

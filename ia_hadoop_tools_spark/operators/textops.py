@@ -40,61 +40,36 @@ from ia_hadoop_tools_spark.functions.textfns import (
     token_count,
     word_shingles,
 )
+from ia_hadoop_tools_spark.plans.stats import log_decision, plan_stats
 
 
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     """Round-robin repartition to ``n`` (default: defaultParallelism) iff
-    the input is SMALL — small enough that its scan cannot yield ~n splits.
+    the input is too small for its scan to yield ~n splits.
 
-    CPU-bound per-row operators (shingling, hashing, vector math) inherit the
-    scan's partitioning; a small table in one parquet row group runs on ONE
-    core. At 100 TB inputs already have thousands of partitions and this is a
-    no-op.
-
-    ROUND-11 (guide §1.2 — the decision must not cost a job): the old
-    ``df.rdd.getNumPartitions()`` probe silently EXECUTES every upstream
-    AQE stage when the plan contains a shuffle or broadcast join (``.rdd``
-    forces adaptive planning of the whole query) — measured 1.6 s and one
-    full join job at plan-BUILD time on the novel_docs batch. Decide from
-    the optimizer's size estimates instead, summed over the plan's LEAF
-    relations (zero execution): small leaves bound the whole plan's output
-    — any derived table is at most join-multiplied small data, exactly the
-    case the spread exists for — while the post-join estimate itself is
-    non-CBO-inflated (observed 36 GB for a 0.6 MB broadcast join) and
-    would mis-skip. Threshold ``n * maxPartitionBytes`` mirrors the old
-    partition-count rule: a leaf set big enough to yield ~n scan splits
-    (or any shuffle above it, which yields shuffle.partitions) never
-    repartitions. Unknown-size leaves (cached/RDD-backed: Long.Max
-    estimates) land above the threshold — the no-op side, matching the old
-    rule (such inputs are materialized, already spread by their producer).
+    CPU-bound per-row operators (shingling, hashing, vector math) inherit
+    the scan's partitioning; a small table in one parquet row group runs on
+    ONE core. Rule: spread when the plan's leaves sum below
+    ``n * maxPartitionBytes`` (every leaf counted at its estimate, cached
+    ones too: the question is how many splits the input can yield), so at
+    scale this is a no-op. Unknown-size leaves (Long.Max) and unreadable
+    statistics keep the frame as it is: not spreading is correct at any
+    size. Mechanism and decision record: ``plans/stats.py``.
     """
     if n is None:
         n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        leaves = plan.collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            total += int(str(leaves.apply(i).stats().sizeInBytes()))
-            if total >= n * _max_partition_bytes(df):
-                return df
-        return df.repartition(n)
-    except Exception:
-        # fall back to the pre-round-11 probe (may execute AQE stages)
-        if df.rdd.getNumPartitions() < n:
-            return df.repartition(n)
-        return df
-
-
-def _max_partition_bytes(df: DataFrame) -> int:
-    raw = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728"
+    stats = plan_stats(df)
+    total = threshold = None
+    spread = False
+    if stats is not None:
+        total = sum(size for _, size in stats.leaves)
+        threshold = n * stats.max_partition_bytes
+        spread = total < threshold
+    log_decision(
+        "ensure_min_partitions", "spread" if spread else "keep",
+        leaf_bytes=total, threshold=threshold,
     )
-    try:
-        return int(raw)
-    except ValueError:
-        jvm = df.sparkSession.sparkContext._jvm
-        return int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
+    return df.repartition(n) if spread else df
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -50,6 +50,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ia_hadoop_tools_spark.plans.stats import log_decision, plan_stats
+
 #: second-hash salt; any fixed literal works, it only has to match
 #: between build and probe (both call :func:`_hash_cols`).
 BLOOM_SALT = 0x9E3779B1
@@ -168,26 +170,25 @@ def _or_masks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _needs_mask_reduce(df: DataFrame) -> bool:
-    """True when the scan could yield more than MASK_REDUCE_PARTITIONS
-    partitions — decided from the optimizer's LEAF size estimates, zero
-    execution (round-11: an ``.rdd.getNumPartitions()`` probe executes
-    every upstream AQE stage when the build side contains a shuffle or
-    broadcast join — see textops.ensure_min_partitions). Conservative
-    toward APPLYING the second reduce level: an unknown or inflated
-    estimate costs one repartition of KB-sized mask rows; skipping it
-    wrongly would collect a mask row per partition on the driver."""
-    try:
-        from ia_hadoop_tools_spark.operators.textops import (
-            _max_partition_bytes,
-        )
-
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            total += int(str(leaves.apply(i).stats().sizeInBytes()))
-        return total > MASK_REDUCE_PARTITIONS * _max_partition_bytes(df)
-    except Exception:
-        return True  # safe side: bounded extra level, tiny rows
+    """True when the scan could yield more than ``MASK_REDUCE_PARTITIONS``
+    partitions: the plan's leaves (each counted at its estimate) sum above
+    ``MASK_REDUCE_PARTITIONS * maxPartitionBytes``. Unknown sizes and
+    unreadable statistics apply the second level: a wrong yes costs one
+    repartition of KB-sized mask rows, a wrong no collects a mask row per
+    partition on the driver. Mechanism and decision record:
+    ``plans/stats.py``."""
+    stats = plan_stats(df)
+    total = threshold = None
+    reduce = True
+    if stats is not None:
+        total = sum(size for _, size in stats.leaves)
+        threshold = MASK_REDUCE_PARTITIONS * stats.max_partition_bytes
+        reduce = total > threshold
+    log_decision(
+        "bloom_mask_reduce", "reduce" if reduce else "direct",
+        leaf_bytes=total, threshold=threshold,
+    )
+    return reduce
 
 
 def bloom_build(

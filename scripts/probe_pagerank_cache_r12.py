@@ -31,6 +31,7 @@ def main() -> None:
         pagerank,
         symmetric_edges,
     )
+    from ia_hadoop_tools_spark.plans.stats import plan_stats
     from ia_hadoop_tools_spark.session import get_spark, load_tables
 
     spark = get_spark("r12-pagerank-cache-probe")
@@ -46,11 +47,7 @@ def main() -> None:
 
     for sf_dir in dirs:
         e = edges_of(sf_dir)
-        leaves = e._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = sum(
-            int(str(leaves.apply(i).stats().sizeInBytes()))
-            for i in range(leaves.size())
-        )
+        total = sum(size for _, size in plan_stats(e).leaves)
         auto_caches = _edges_exceed_lazy_budget(e)
         print(
             f"{sf_dir}: leaf bytes {total:,} auto_cache_edges={auto_caches}"

@@ -355,7 +355,9 @@ def test_bpe_train_releases_all_storage(spark, sf_dir):
     assert _persistent_ids(spark) - before == set()
 
 
-def test_bpe_train_single_partition_vocab_identical(spark, sf_dir):
+def test_bpe_train_single_partition_vocab_identical(
+    spark, sf_dir, monkeypatch, caplog
+):
     """Round 12 (VERDICT r11 #5): vocab_rows at or below the
     single-partition budget runs the merge loop over a coalesce(1) vocab —
     every per-merge stats/argmax job is then one exchange-free stage.
@@ -379,17 +381,20 @@ def test_bpe_train_single_partition_vocab_identical(spark, sf_dir):
     assert b_single == b_multi == multi
     assert _persistent_ids(spark) - before == set()
 
-    # the env override gates the coalesce: budget 0 disables it
-    import os
+    # the module constant gates the coalesce: budget 0 disables it
+    from ia_hadoop_tools_spark.operators import bpe
 
-    os.environ["SPARK_GRAFT_BPE_ONE_PART_VOCAB"] = "0"
-    try:
+    monkeypatch.setattr(bpe, "BPE_ONE_PARTITION_VOCAB_ROWS", 0)
+    caplog.clear()
+    with caplog.at_level("INFO", logger="ia_hadoop_tools_spark.decisions"):
         assert (
-            bpe_train(docs, "text", num_merges=6, vocab_rows=n_vocab)
-            == multi
+            bpe_train(docs, "text", num_merges=6, vocab_rows=n_vocab) == multi
         )
-    finally:
-        del os.environ["SPARK_GRAFT_BPE_ONE_PART_VOCAB"]
+    [rec] = [
+        r for r in caplog.records
+        if getattr(r, "decision", None) == "bpe_one_partition"
+    ]
+    assert rec.branch == "source_partitioning"
 
 
 def test_pagerank_releases_superseded_checkpoints(spark):
